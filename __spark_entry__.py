@@ -7918,16 +7918,17 @@ FROM merged GROUP BY o_orderpriority
 
 def drift_multibatch_pipeline(spark, sf_dir):
     """Multi-batch schema-drift e2e through the full scheduled-batch
-    pipeline (plans/pipeline.py run_batch, drift_mode=incremental;
-    r10 verdict task #5): four JSON batches derived from orders —
+    pipeline (plans/pipeline.py run_batch; r10 verdict task #5): four
+    JSON batches derived from orders —
     (1) the base shape → 'created'; (2) +color column →
     'drift-recreated'; (3) color REMOVED → 'partitions-only' (the
     pinned append-sink semantic: parquet append can only widen the
     name set, so a column absent from one batch is not drift);
     (4) same names but tts sent as STRING → 'partitions-only' (the
     pinned H3 names-only / type-blind contract — safe exactly
-    because incremental mode never mergeSchema-re-reads the mixed
-    sink). Returns (batch_id, catalog_action, rows_written); DuckDB
+    because the ledger-driven catalog sync never mergeSchema-re-reads
+    the mixed sink). Returns (batch_id, catalog_action, rows_written),
+    a batch's rows being the growth of run_batch's sink total; DuckDB
     recomputes the row counts from orders and pins the action
     sequence."""
     import shutil
@@ -7979,9 +7980,9 @@ def drift_multibatch_pipeline(spark, sf_dir):
         sink_path=tmp + "/sink",
         catalog_db_name=db,
         catalog_table_prefix="mb",
-        drift_mode="incremental",
     )
     rows = []
+    sink_total = 0
     try:
         plan = [
             (1, batch(1)),
@@ -7992,7 +7993,8 @@ def drift_multibatch_pipeline(spark, sf_dir):
         for i, b in plan:
             b.coalesce(1).write.mode("overwrite").json(src)
             r = run_batch(spark, cfg)
-            rows.append((i, r.catalog_action, r.rows_written))
+            rows.append((i, r.catalog_action, r.rows_written - sink_total))
+            sink_total = r.rows_written
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         spark.sql(f"DROP DATABASE IF EXISTS `{db}` CASCADE")

@@ -12,9 +12,10 @@ Spark-native rebuild of the reference's Glue/Athena protocol
   types are deliberately ignored. This type-blind contract is
   load-bearing (a long→string change is *not* drift).
 * H5/H7 partition-spec strings + diff (:186-197, :217-229) — the
-  reference computes current partitions from the *re-read sink*, not
-  the incoming batch (:219 uses the global ``merged_df``); callers
-  here pass the merged sink DataFrame to preserve that semantic.
+  reference diffs the *re-read sink*'s partitions against the
+  catalog (:219 uses the global ``merged_df``); here the incoming
+  batch's partitions are diffed against the durable ledger, which
+  already holds every partition written before it (same result).
 * H8 ``create_update_data_catalog`` (:237-274) — decision tree:
   table absent → create (the crawler's job); schema drift → recreate
   the table definition; no drift → register only new partitions.
@@ -25,8 +26,8 @@ synchronous ``spark.sql`` calls — no wait loops needed.
 Scale note: everything that reaches the driver here is *metadata*
 (column names, distinct partition tuples) — cardinality is bounded by
 the catalog, not the data. The distinct partition computation is a
-map-side-combined hash aggregate over only the partition columns,
-which parquet column pruning reduces to a few-KB scan per file.
+map-side-combined hash aggregate over only the batch's partition
+columns; the sink itself is re-read only when no ledger exists.
 """
 
 from __future__ import annotations
@@ -37,6 +38,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from .sources.readers import read_parquet_merged
 
 SchemaEntry = dict[str, str]
 
@@ -171,24 +174,6 @@ def show_partitions(spark: SparkSession, db: str, table: str) -> list[str]:
             kvs.append(f"{k}={esc.unescapePathName(v)}")
         out.append("/".join(kvs))
     return out
-
-
-def add_new_partitions(
-    spark: SparkSession,
-    df: DataFrame,
-    db: str,
-    table: str,
-    partition_cols: list[str],
-) -> list[str]:
-    """H7 (:217-229): diff data partitions against the catalog and
-    register the new ones. ``df`` should be the merged sink read — the
-    reference derives partitions from the sink, not the batch (:219)."""
-    prev = show_partitions(spark, db, table)
-    curr = partition_specs_from_data(df, partition_cols)
-    new = new_partition_specs(curr, prev)
-    if new:
-        spark.sql(partitions_ddl(db, table, new))
-    return new
 
 
 def _ddl_type(f) -> str:
@@ -367,66 +352,6 @@ def save_catalog_state(
         fs.delete(aside, False)
 
 
-def sync_catalog(
-    spark: SparkSession,
-    merged_df: DataFrame,
-    sink_path: str,
-    db: str,
-    table: str,
-    partition_cols: list[str],
-) -> str:
-    """H8 ``create_update_data_catalog`` (:237-274), Spark-native.
-
-    Returns the action taken: ``"created"``, ``"drift-recreated"``, or
-    ``"partitions-only"`` — mirroring the reference's three branches
-    (table absent → crawl/create; drift → re-crawl; else → add
-    partitions). Durable state (the Glue stand-in) lives in a JSON
-    ledger beside the sink so the decision survives process restarts;
-    the Spark session catalog is (re)materialized from it each run.
-    """
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
-    state = load_catalog_state(sink_path)
-    curr_schema = schema_for_catalog(merged_df)
-    table_exists = spark.catalog.tableExists(f"`{db}`.`{table}`")
-
-    if state is None or not table_exists:
-        # First contact (or fresh session): the crawler's job.
-        if table_exists and not schema_match(
-            curr_schema, schema_for_catalog(spark.table(f"`{db}`.`{table}`"))
-        ):
-            spark.sql(f"DROP TABLE `{db}`.`{table}`")
-        create_table_over_path(
-            spark, merged_df.schema, sink_path, db, table, partition_cols
-        )
-        parts = show_partitions(spark, db, table) if partition_cols else []
-        action = "created" if state is None else None
-        if action is None:
-            action = (
-                "partitions-only"
-                if schema_match(curr_schema, state["schema"])
-                else "drift-recreated"
-            )
-        save_catalog_state(sink_path, curr_schema, parts)
-        return action
-
-    if not schema_match(curr_schema, state["schema"]):
-        spark.sql(f"DROP TABLE `{db}`.`{table}`")
-        create_table_over_path(
-            spark, merged_df.schema, sink_path, db, table, partition_cols
-        )
-        parts = show_partitions(spark, db, table) if partition_cols else []
-        save_catalog_state(sink_path, curr_schema, parts)
-        return "drift-recreated"
-
-    new = add_new_partitions_from_state(
-        spark, merged_df, db, table, partition_cols, state
-    )
-    save_catalog_state(
-        sink_path, curr_schema, list(set(state.get("partitions", [])) | set(new))
-    )
-    return "partitions-only"
-
-
 def _union_entries(
     prev: list[SchemaEntry], batch: list[SchemaEntry]
 ) -> list[SchemaEntry]:
@@ -438,6 +363,16 @@ def _union_entries(
     return list(prev) + [e for e in batch if e["Name"] not in seen]
 
 
+def _union_struct(base: StructType, extra: StructType) -> StructType:
+    """``base`` plus the fields of ``extra`` whose lowercased name it
+    lacks: the names-union a mergeSchema re-read of the sink reports
+    once ``extra`` is appended (H3 is case- and type-blind)."""
+    seen = {f.name.lower() for f in base.fields}
+    return StructType(
+        list(base.fields) + [f for f in extra.fields if f.name.lower() not in seen]
+    )
+
+
 def _struct_from_entries(entries: list[SchemaEntry]) -> StructType:
     """Reconstruct a StructType from ledger entries. Ledger types are
     ``simpleString()`` outputs, which are valid DDL type names."""
@@ -445,7 +380,7 @@ def _struct_from_entries(entries: list[SchemaEntry]) -> StructType:
     return StructType.fromDDL(ddl)
 
 
-def sync_catalog_incremental(
+def sync_catalog(
     spark: SparkSession,
     batch_df: DataFrame,
     sink_path: str,
@@ -453,83 +388,66 @@ def sync_catalog_incremental(
     table: str,
     partition_cols: list[str],
 ) -> str:
-    """H8 at O(metadata): the drift decision and partition diff come
-    from the durable ledger plus the incoming batch ALONE — the sink
-    is never re-read, so there is no O(footers) mergeSchema scan.
+    """H8 ``create_update_data_catalog`` (:237-274), Spark-native.
 
-    This is the 100 TB drift path the reference's Delta config gestures
-    at (``emr_json_parquet_schema_drift_etl.py:287-292``): a
-    transaction-log-style O(1) schema lookup instead of re-deriving
-    the union schema from every data file. Equivalence argument:
-    after every write the ledger records the sink's column-name set
-    and registered partitions, and a parquet append can only change
-    either through the batch being appended — so
+    Call after ``batch_df`` has been appended to the sink. Returns the
+    action taken: ``"created"``, ``"drift-recreated"``, or
+    ``"partitions-only"`` — the reference's three branches (table
+    absent → crawl/create; drift → re-crawl; else → add partitions).
+
+    The reference decides drift from a mergeSchema re-read of the
+    whole sink every run (:348-350). Here the durable ledger beside
+    the sink (the Glue stand-in) records the sink's column-name set
+    and registered partitions after every sync, and a parquet append
+    can change either only through the batch being appended — so
     ``ledger ∪ batch == mergeSchema(sink)`` under the names-only H3
-    contract. If the sink predates the ledger (out-of-band writes),
-    run full :func:`sync_catalog` once to seed the ledger.
-
-    Same return values and decision tree as :func:`sync_catalog`.
+    contract, and the decision costs O(metadata + batch), not
+    O(footers). The sink is re-read only when no ledger exists (first
+    contact, a lost ledger, or a sink written before the ledger). The Spark
+    session catalog forgets between processes; it is rebuilt from the
+    ledger when the table is missing.
     """
     spark.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+    name = f"`{db}`.`{table}`"
     state = load_catalog_state(sink_path)
-    batch_schema = schema_for_catalog(batch_df)
-    table_exists = spark.catalog.tableExists(f"`{db}`.`{table}`")
+    table_exists = spark.catalog.tableExists(name)
 
-    if state is None or not table_exists:
-        # First contact under the ledger protocol: the just-appended
-        # batch IS the sink; with a ledger but a fresh session
-        # catalog, reconstruct the union schema from the ledger. A
-        # LOST ledger beside a surviving table (S3 lifecycle rule,
-        # manual cleanup) must seed from the TABLE's schema too —
-        # batch-only seeding silently dropped every sink column the
-        # batch happened to lack from the recreated table and the new
-        # ledger (r12 review find).
-        if state is not None:
-            merged = _union_entries(state["schema"], batch_schema)
-        elif table_exists:
-            merged = _union_entries(
-                schema_for_catalog(spark.table(f"`{db}`.`{table}`")),
-                batch_schema,
-            )
-        else:
-            merged = batch_schema
+    if state is None:
+        schema = read_parquet_merged(spark, sink_path).schema
+        entries = schema_for_catalog(schema)
         if table_exists and not schema_match(
-            merged, schema_for_catalog(spark.table(f"`{db}`.`{table}`"))
+            entries, schema_for_catalog(spark.table(name))
         ):
-            spark.sql(f"DROP TABLE `{db}`.`{table}`")
-        create_table_over_path(
-            spark, _struct_from_entries(merged), sink_path, db, table,
-            partition_cols,
-        )
-        parts = show_partitions(spark, db, table) if partition_cols else []
-        action = "created" if state is None else None
-        if action is None:
-            action = (
-                "partitions-only"
-                if schema_match(merged, state["schema"])
-                else "drift-recreated"
+            spark.sql(f"DROP TABLE {name}")
+        action = "created"
+    else:
+        entries = _union_entries(state["schema"], schema_for_catalog(batch_df))
+        drift = not schema_match(entries, state["schema"])
+        if table_exists and not drift:
+            new = add_new_partitions_from_state(
+                spark, batch_df, db, table, partition_cols, state
             )
-        save_catalog_state(sink_path, merged, parts)
-        return action
-
-    merged = _union_entries(state["schema"], batch_schema)
-    if not schema_match(merged, state["schema"]):
-        spark.sql(f"DROP TABLE `{db}`.`{table}`")
-        create_table_over_path(
-            spark, _struct_from_entries(merged), sink_path, db, table,
-            partition_cols,
+            # an append into an already-registered partition adds
+            # files the table's cached listing does not hold
+            spark.catalog.refreshTable(name)
+            save_catalog_state(
+                sink_path, entries, set(state.get("partitions", [])) | set(new)
+            )
+            return "partitions-only"
+        base = (
+            spark.table(name).schema
+            if table_exists
+            else _struct_from_entries(state["schema"])
         )
-        parts = show_partitions(spark, db, table) if partition_cols else []
-        save_catalog_state(sink_path, merged, parts)
-        return "drift-recreated"
+        schema = _union_struct(base, batch_df.schema)
+        if table_exists:
+            spark.sql(f"DROP TABLE {name}")
+        action = "drift-recreated" if drift else "partitions-only"
 
-    new = add_new_partitions_from_state(
-        spark, batch_df, db, table, partition_cols, state
-    )
-    save_catalog_state(
-        sink_path, merged, sorted(set(state.get("partitions", [])) | set(new))
-    )
-    return "partitions-only"
+    create_table_over_path(spark, schema, sink_path, db, table, partition_cols)
+    parts = show_partitions(spark, db, table) if partition_cols else []
+    save_catalog_state(sink_path, entries, parts)
+    return action
 
 
 def add_new_partitions_from_state(

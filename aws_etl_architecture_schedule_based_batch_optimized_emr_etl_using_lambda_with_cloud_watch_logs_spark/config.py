@@ -28,20 +28,17 @@ class EtlConfig:
     archival_folder: str = "archive"
     rehydration_folder: str = "rehydrated"
     legacy_day: bool = True
-    # "full" re-reads the sink with mergeSchema for the drift decision
-    # (reference parity, O(footers)); "incremental" decides from the
-    # durable catalog ledger + the incoming batch (O(metadata) — the
-    # 100 TB path; see catalog.sync_catalog_incremental).
-    drift_mode: str = "full"
     # Sink format. "delta" is honored only when the delta-spark
     # package is importable (it gives O(1) schema-from-log drift
-    # natively); plain parquet + the ledger achieves the same
-    # asymptotics via drift_mode="incremental".
+    # natively); plain parquet + the catalog ledger achieves the same
+    # asymptotics (catalog.sync_catalog). run_batch is parquet-only.
     sink_format: str = "parquet"
 
     @classmethod
     def from_dict(cls, raw: dict) -> "EtlConfig":
-        # Accept the reference's s3-flavored key names as aliases.
+        # Accept the reference's s3-flavored key names as aliases;
+        # unknown keys are dropped, so configs naming retired options
+        # still load.
         aliases = {"source_s3_path": "source_path", "sink_s3_path": "sink_path"}
         known = {f.name for f in fields(cls)}
         clean = {}

@@ -8,9 +8,9 @@ Stages (each maps 1:1 to a reference line range):
    camelCase)                                  (:326, :57-95)
 3. derive row_insert_tsp/date, year/month/day  (:327-331)
 4. partitioned append write                    (:336-343)
-5. re-read sink with mergeSchema (drift view)  (:348-350)
-6. catalog sync: create / drift-recreate /
-   add-partitions                              (:355-356, :237-274)
+5. catalog sync: create / drift-recreate /
+   add-partitions, decided from the ledger     (:355-356, :237-274)
+6. re-read sink under the union schema         (:348-350)
 7. archive source files (incremental ledger)   (:361, :24-51)
 
 The cluster-provisioning Lambda (J2) collapses to this function being
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.utils import AnalysisException
 
-from ..catalog import sync_catalog, sync_catalog_incremental
+from ..catalog import sync_catalog
 from ..config import EtlConfig
 from ..operators.derive import PARTITION_COLS, with_ingest_columns
 from ..operators.flatten import flatten
@@ -54,7 +54,7 @@ def run_batch(
     partition_cols = partition_cols or PARTITION_COLS
 
     if config.sink_format != "parquet":
-        # The drift re-read (mergeSchema over raw files) and the
+        # The sink re-read (raw parquet files) and the
         # catalog registration (USING parquet) are parquet-shaped: a
         # delta/iceberg sink read this way would bypass the
         # transaction log and count uncommitted files. Fail loudly
@@ -124,42 +124,26 @@ def run_batch(
         # the missing-column form processes identically.
         flat = flat.withColumn("tts", F.lit(None).cast("bigint"))
     denorm = with_ingest_columns(flat, legacy_day=config.legacy_day)
-    if config.drift_mode == "incremental":
-        # two consumers in this mode (the write + the rows count):
-        # cache so the source scan + flatten run once; unpersist in a
-        # finally — a transient write/sync failure in a long-lived
-        # scheduled session must not pin the batch's blocks in
-        # executor storage forever (r12 review find)
-        denorm = denorm.persist()
-        try:
-            write_partitioned(
-                denorm, config.sink_path, partition_cols, mode="append",
-                fmt=config.sink_format,
-            )
-            table = f"{config.catalog_table_prefix}_sink"
-            # O(metadata) drift: ledger + batch only; the sink is NOT
-            # re-read, so rows_written reports the batch (the sink
-            # total is the "full" mode / reference semantic).
-            merged = None
-            action = sync_catalog_incremental(
-                spark, denorm, config.sink_path, config.catalog_db_name,
-                table, partition_cols,
-            )
-            rows = denorm.count()
-        finally:
-            denorm.unpersist()
-    else:
-        write_partitioned(
-            denorm, config.sink_path, partition_cols, mode="append",
-            fmt=config.sink_format,
-        )
-        table = f"{config.catalog_table_prefix}_sink"
-        merged = read_parquet_merged(spark, config.sink_path)
-        action = sync_catalog(
-            spark, merged, config.sink_path, config.catalog_db_name, table,
-            partition_cols,
-        )
-        rows = merged.count()
+    write_partitioned(
+        denorm, config.sink_path, partition_cols, mode="append",
+        fmt=config.sink_format,
+    )
+    table = f"{config.catalog_table_prefix}_sink"
+    action = sync_catalog(
+        spark, denorm, config.sink_path, config.catalog_db_name, table,
+        partition_cols,
+    )
+    # the reference's merged sink view (:348-350) under the catalog's
+    # union schema: no footer scan. Partition columns are left out of
+    # the schema so their types are inferred from the directory names,
+    # as the mergeSchema re-read does.
+    part_set = {c.lower() for c in partition_cols}
+    data_schema = StructType([
+        f for f in spark.table(f"`{config.catalog_db_name}`.`{table}`").schema
+        if f.name.lower() not in part_set
+    ])
+    merged = read_parquet_merged(spark, config.sink_path, schema=data_schema)
+    rows = merged.count()
 
     archived: list[str] = []
     if archive:

@@ -46,10 +46,16 @@ def read_json(
     return df
 
 
-def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet_merged(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame:
     """A3: the sink re-read with all historical schemas merged — the
     reference's drift detector (:348-350). O(footers); on a Delta/
-    Iceberg sink the schema lives in the log and this is O(1)."""
+    Iceberg sink the schema lives in the log and this is O(1). A known
+    union ``schema`` (the catalog's) skips the footer scan: files
+    lacking a column read it as NULL, as under mergeSchema."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 

@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 def delta_available() -> bool:
     """True when the delta-spark package is importable. Delta gives
     O(1) schema-from-transaction-log drift detection natively; without
-    it, catalog.sync_catalog_incremental provides the same asymptotics
-    over plain parquet via the durable ledger."""
+    it, catalog.sync_catalog provides the same asymptotics over plain
+    parquet via the durable ledger."""
     from importlib.util import find_spec
 
     return find_spec("delta") is not None
@@ -87,8 +87,8 @@ def write_partitioned(
     if fmt == "delta" and not delta_available():
         raise RuntimeError(
             "sink_format='delta' requested but the delta-spark package "
-            "is not installed; use parquet with "
-            "drift_mode='incremental' for O(1) drift detection instead"
+            "is not installed; use parquet, whose catalog ledger gives "
+            "O(metadata) drift detection, instead"
         )
     if files_per_partition:
         keys = [F.col(c) for c in partition_cols]

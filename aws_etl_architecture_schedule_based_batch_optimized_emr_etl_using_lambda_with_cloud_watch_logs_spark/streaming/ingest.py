@@ -366,7 +366,6 @@ def stream_ingest_with_catalog(
     table_prefix: str = "stream",
     partition_cols: list[str] | None = None,
     legacy_day: bool = True,
-    drift_mode: str = "incremental",
     reader_options: dict | None = None,
 ) -> StreamingQuery:
     """The COMPLETE reference semantics in streaming form:
@@ -377,12 +376,11 @@ def stream_ingest_with_catalog(
     is the idiomatic bridge wherever a sink needs batch-only
     features (dynamic partition overwrite, catalog DDL, MERGE).
 
-    ``drift_mode`` defaults to "incremental" here (unlike the batch
-    pipeline's "full"): a stream syncs the catalog EVERY micro-batch,
-    so an O(footers) mergeSchema re-read per batch compounds into a
-    quadratic total scan over the stream's life — the ledger-based
-    O(metadata) decision is the only shape that survives a long-lived
-    100 TB/day stream. "full" keeps the reference-parity re-read.
+    The catalog sync decides drift from the durable ledger plus the
+    micro-batch (catalog.sync_catalog): a stream syncs EVERY
+    micro-batch, so a mergeSchema re-read of the sink per batch would
+    compound into a quadratic total scan over the stream's life. The
+    sink is re-read only on the first batch (no ledger yet).
 
     ``reader_options``: extra file-source options
     (``maxFilesPerTrigger`` / ``maxBytesPerTrigger`` — the real
@@ -401,9 +399,8 @@ def stream_ingest_with_catalog(
     by tests/test_streaming.py::
     test_stream_restart_mid_drain_exactly_once.
     """
-    from ..catalog import sync_catalog, sync_catalog_incremental
+    from ..catalog import sync_catalog
     from ..sources import writers as _writers
-    from ..sources.readers import read_parquet_merged
 
     partition_cols = partition_cols or PARTITION_COLS
 
@@ -411,8 +408,8 @@ def stream_ingest_with_catalog(
         if batch_df.isEmpty():
             # a zero-row batch (empty source file) writes nothing: a
             # first-batch write of only _SUCCESS would make the
-            # drift_mode='full' sink re-read fail schema inference
-            # and poison-pill the checkpoint (r12 review find)
+            # catalog's first-contact sink re-read fail schema
+            # inference and poison-pill the checkpoint (r12 review find)
             return
         denorm = with_ingest_columns(
             flatten(batch_df), legacy_day=legacy_day
@@ -457,21 +454,10 @@ def stream_ingest_with_catalog(
         )
         # the catalog registers the on-disk layout, which now ends
         # with the ingest_batch idempotence level
-        if drift_mode == "incremental":
-            sync_catalog_incremental(
-                spark, denorm, sink_path, catalog_db,
-                f"{table_prefix}_sink", layout,
-            )
-        else:
-            merged = read_parquet_merged(spark, sink_path)
-            sync_catalog(
-                spark,
-                merged,
-                sink_path,
-                catalog_db,
-                f"{table_prefix}_sink",
-                layout,
-            )
+        sync_catalog(
+            spark, denorm, sink_path, catalog_db, f"{table_prefix}_sink",
+            layout,
+        )
 
     return (
         spark.readStream.schema(schema)

@@ -127,7 +127,7 @@ def test_show_partitions_unescapes_to_raw_specs(spark, tmp_path):
     re-adding every special-char partition on every run."""
     from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.catalog import (
         load_catalog_state,
-        sync_catalog_incremental,
+        sync_catalog,
     )
 
     sink = str(tmp_path / "sink")
@@ -135,7 +135,7 @@ def test_show_partitions_unescapes_to_raw_specs(spark, tmp_path):
         [(1, "a:b"), (2, "plain")], "id bigint, category string"
     )
     df.write.partitionBy("category").parquet(sink)
-    action = sync_catalog_incremental(
+    action = sync_catalog(
         spark, df, sink, "esc_db", "t", ["category"]
     )
     try:
@@ -145,7 +145,7 @@ def test_show_partitions_unescapes_to_raw_specs(spark, tmp_path):
             "category=a:b", "category=plain",
         }  # raw, never a%3Ab
         # a replayed batch must be partitions-only with NO re-adds
-        action2 = sync_catalog_incremental(
+        action2 = sync_catalog(
             spark, df, sink, "esc_db", "t", ["category"]
         )
         assert action2 == "partitions-only"
@@ -158,15 +158,14 @@ def test_show_partitions_unescapes_to_raw_specs(spark, tmp_path):
 def test_lost_ledger_with_surviving_table_keeps_wide_schema(
     spark, tmp_path
 ):
-    """A lost ledger beside a surviving table must seed from the
-    TABLE's schema, not the batch alone — batch-only seeding silently
-    dropped every sink column the next batch lacked (r12 review
-    find)."""
+    """A lost ledger beside a surviving table must reseed from the
+    sink, not the batch alone — batch-only seeding silently dropped
+    every sink column the next batch lacked (r12 review find)."""
     import os
 
     from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.catalog import (
         load_catalog_state,
-        sync_catalog_incremental,
+        sync_catalog,
     )
 
     sink = str(tmp_path / "sink")
@@ -174,14 +173,14 @@ def test_lost_ledger_with_surviving_table_keeps_wide_schema(
         [(1, "x", 1.5, "g1")], "id bigint, extra string, val double, grp string"
     )
     wide.write.partitionBy("grp").parquet(sink)
-    sync_catalog_incremental(spark, wide, sink, "lost_db", "t", ["grp"])
+    sync_catalog(spark, wide, sink, "lost_db", "t", ["grp"])
     try:
         os.remove(os.path.join(sink, "_catalog_state.json"))
         narrow = spark.createDataFrame(
             [(2, 2.5, "g2")], "id bigint, val double, grp string"
         )
         narrow.write.mode("append").partitionBy("grp").parquet(sink)
-        sync_catalog_incremental(spark, narrow, sink, "lost_db", "t", ["grp"])
+        sync_catalog(spark, narrow, sink, "lost_db", "t", ["grp"])
         cols = {f.name for f in spark.table("lost_db.t").schema.fields}
         assert "extra" in cols  # survived the lost-ledger reseed
         state = load_catalog_state(sink)

@@ -362,32 +362,43 @@ def test_malformed_json_quarantined_not_fatal(spark, tmp_path):
     assert len(bad) == 1 and "NOT JSON" in bad[0]["_corrupt_record"]
 
 
-def test_incremental_drift_mode_never_rereads_sink(spark, etl_dirs, monkeypatch):
-    """drift_mode="incremental" must reproduce the full-mode action
-    sequence (created → no-op → drift-recreated → partitions-only)
-    while NEVER re-reading the sink: read_parquet_merged is poisoned
-    for the whole drive."""
+def test_ledger_path_never_rereads_sink(spark, etl_dirs, monkeypatch):
+    """The ledger-driven catalog sync reproduces the reference's
+    action sequence (created → no-op → drift-recreated →
+    partitions-only) while re-reading the sink with mergeSchema only
+    on the first, ledger-less tick: the footer re-read is poisoned for
+    every later tick."""
+    from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark import (
+        catalog as C,
+    )
     from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.plans import (
         pipeline as P,
     )
-
-    def _boom(*a, **k):
-        raise AssertionError("incremental mode must not re-read the sink")
-
-    monkeypatch.setattr(P, "read_parquet_merged", _boom)
 
     cfg = EtlConfig(
         source_path=etl_dirs["source"],
         sink_path=etl_dirs["sink"],
         catalog_db_name="etl_inc",
         catalog_table_prefix="ti",
-        drift_mode="incremental",
     )
 
     _write_batch(etl_dirs["source"], "batch1.json", BATCH_1)
     res1 = run_batch(spark, cfg)
     assert res1.catalog_action == "created"
-    assert res1.rows_written == 3  # batch rows (sink==batch on first run)
+    assert res1.rows_written == 3  # sink total == batch on first run
+
+    def _boom(*a, **k):
+        raise AssertionError("the ledger path must not re-read the sink")
+
+    read_typed = P.read_parquet_merged
+
+    def _typed_only(spark, path, schema=None):
+        if schema is None:
+            _boom()
+        return read_typed(spark, path, schema=schema)
+
+    monkeypatch.setattr(C, "read_parquet_merged", _boom)
+    monkeypatch.setattr(P, "read_parquet_merged", _typed_only)
 
     res2 = run_batch(spark, cfg)  # source drained by archival
     assert res2.catalog_action == "no-op"
@@ -415,6 +426,99 @@ def test_incremental_drift_mode_never_rereads_sink(spark, etl_dirs, monkeypatch)
     # and the catalog answers queries over the whole sink
     n = spark.sql("SELECT count(*) FROM `etl_inc`.`ti_sink`").collect()[0][0]
     assert n == res1.rows_written + 1 + 1
+
+
+def test_same_partition_appends_refresh_catalog_table(spark, tmp_path):
+    """Three ticks appending into one registered partition: the
+    catalog table must count what the sink holds after each tick, so
+    the partitions-only sync refreshes the table's cached file
+    listing."""
+    cfg = EtlConfig(
+        source_path=str(tmp_path / "source"),
+        sink_path=str(tmp_path / "sink"),
+        catalog_db_name="etl_refresh",
+        catalog_table_prefix="rf",
+    )
+    record = {"customerid": "c1", "vehicle": "v1", "category": "k",
+              "tts": 1704103200}
+    counts = []
+    try:
+        for i in range(3):
+            _write_batch(cfg.source_path, f"b{i}.json", [record])
+            res = run_batch(spark, cfg)
+            n = spark.sql(
+                "SELECT count(*) FROM `etl_refresh`.`rf_sink`"
+            ).collect()[0][0]
+            counts.append((res.catalog_action, res.rows_written, n))
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS etl_refresh CASCADE")
+    assert counts == [
+        ("created", 1, 1),
+        ("partitions-only", 2, 2),
+        ("partitions-only", 3, 3),
+    ]
+
+
+def test_ledger_matches_sink_through_every_sync_branch(spark, etl_dirs):
+    """The invariant the per-tick mergeSchema re-read used to check
+    for free: after created, drift-recreated, partitions-only and a
+    lost-ledger reseed, the ledger's names are the lowercased names of
+    a mergeSchema re-read of the sink, and its partitions are the
+    sink's partition directories."""
+    from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.catalog import (
+        load_catalog_state,
+    )
+    from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.sources.readers import (
+        read_parquet_merged,
+    )
+
+    sink = etl_dirs["sink"]
+    cfg = EtlConfig(
+        source_path=etl_dirs["source"],
+        sink_path=sink,
+        catalog_db_name="etl_inv",
+        catalog_table_prefix="iv",
+    )
+
+    def sink_partitions() -> set[str]:
+        return {
+            os.path.relpath(base, sink).replace(os.sep, "/")
+            for base, _, files in os.walk(sink)
+            if any(f.endswith(".parquet") for f in files)
+        }
+
+    ticks = [
+        (BATCH_1, False, "created"),
+        (BATCH_2, False, "drift-recreated"),
+        ([dict(BATCH_2[0], customerid="c9", tts=1709546400)], False,
+         "partitions-only"),
+        ([dict(BATCH_1[0], customerid="c5")], True, "created"),
+    ]
+    try:
+        for i, (records, lose_ledger, action) in enumerate(ticks):
+            if lose_ledger:
+                os.remove(os.path.join(sink, "_catalog_state.json"))
+            _write_batch(etl_dirs["source"], f"batch{i}.json", records)
+            res = run_batch(spark, cfg)
+            assert res.catalog_action == action
+            state = load_catalog_state(sink)
+            merged = read_parquet_merged(spark, sink)
+            assert {e["Name"] for e in state["schema"]} == {
+                c.lower() for c in merged.columns
+            }, action
+            assert set(state["partitions"]) == sink_partitions(), action
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS etl_inv CASCADE")
+
+
+def test_config_dict_with_retired_drift_mode_key_loads():
+    """Config files written for the two drift modes still load: the
+    retired "drift_mode" key is dropped like any unknown key."""
+    cfg = EtlConfig.from_dict(
+        {"source_path": "s", "sink_path": "k", "drift_mode": "full"}
+    )
+    assert (cfg.source_path, cfg.sink_path) == ("s", "k")
+    assert not hasattr(cfg, "drift_mode")
 
 
 def test_delta_sink_raises_without_package(spark, etl_dirs):

@@ -6,23 +6,52 @@ the tokenizer-training step of a data pipeline.
 Scale shape (the part that matters at 100 TB): classic BPE training
 iterates over WORD TYPES, not the corpus. One corpus pass builds the
 (word, count) type frame — vocabulary-bounded, orders of magnitude
-smaller than the corpus — and every one of the k merge iterations
-runs on that model-sized frame: an explode of adjacent symbol pairs,
-a weighted count, a 1-row argmax to the driver (bounded metadata,
-the same class as a convergence scalar), and a JVM fold that applies
-the merge inside each word's symbol array. The corpus is never
-rescanned after the first aggregate.
+smaller than the corpus — and the k merge iterations run on that
+model-sized frame; the corpus is never rescanned after the first
+aggregate. The type frame is materialized once, and its size (an
+``Observation`` on that same job) picks where the k iterations run:
+
+* within the single-task budget (``dedup._fits_one_task``): ONE
+  executor task runs the whole greedy loop with incremental pair
+  counts — after a merge only the words holding the merged pair are
+  re-counted — so k merges cost one Spark job, not 2k;
+* above it: the distributed loop — per merge an explode of adjacent
+  symbol pairs, a weighted count, a 1-row argmax collected to the
+  driver (bounded metadata, the same class as a convergence scalar),
+  and a JVM fold that applies the merge inside each word's symbol
+  array.
 
 Determinism: the winning pair is (max weighted count, then
 lexicographic (left, right)) — partitioning-invariant because the
-count is an exact integer aggregate.
+count is an exact integer aggregate; both paths learn the same merges
+(test-pinned).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import heapq
+from collections import Counter, defaultdict
 
-from .dedup import tokens_col
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, functions as F
+
+from .dedup import _fits_one_task, tokens_col
+
+# the single-task kernel's output: the merge table rows (step set)
+# followed by the segmented word types (step NULL)
+_KERNEL_SCHEMA = (
+    "step int, l string, r string, n bigint, syms array<string>, cnt bigint"
+)
+_KERNEL_ARROW = pa.schema(
+    [
+        ("step", pa.int32()),
+        ("l", pa.string()),
+        ("r", pa.string()),
+        ("n", pa.int64()),
+        ("syms", pa.list_(pa.string())),
+        ("cnt", pa.int64()),
+    ]
+)
 
 
 def _pairs_expr():
@@ -88,6 +117,91 @@ def _merge_expr(left: str, right: str):
     )
 
 
+def _merge_word(syms: list[str], left: str, right: str) -> list[str]:
+    """``_merge_expr``'s left-to-right fold on one Python word."""
+    out, i, last = [], 0, len(syms) - 1
+    while i <= last:
+        if i < last and syms[i] == left and syms[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _greedy_merges(
+    words: list[list[str]], cnts: list[int], n_merges: int
+) -> list[tuple[int, str, str, int]]:
+    """The greedy merge loop on in-memory word types, with incremental
+    pair counts: the weighted count of every adjacent pair is built
+    once, and a merge re-counts only the words that hold the merged
+    pair. Same winner rule as the distributed loop — highest count,
+    then the smallest (left, right) (Python compares str by code
+    point, Spark by UTF-8 bytes: the same order) — and the same stop
+    rule, n < 2. Segments ``words`` in place; returns the merges."""
+    pair_n: defaultdict[tuple[str, str], int] = defaultdict(int)
+    holders: defaultdict[tuple[str, str], set[int]] = defaultdict(set)
+    for i, (syms, cnt) in enumerate(zip(words, cnts)):
+        for p in zip(syms, syms[1:]):
+            pair_n[p] += cnt
+            holders[p].add(i)
+    # max-heap on (n, then smallest pair) with lazy deletion: an entry
+    # is live while its count is still the pair's current count
+    heap = [(-n, p) for p, n in pair_n.items()]
+    heapq.heapify(heap)
+    merges: list[tuple[int, str, str, int]] = []
+    for step in range(1, n_merges + 1):
+        while heap and pair_n.get(heap[0][1]) != -heap[0][0]:
+            heapq.heappop(heap)
+        if not heap or -heap[0][0] < 2:
+            break  # nothing left worth merging
+        neg_n, (l, r) = heapq.heappop(heap)
+        merges.append((step, l, r, -neg_n))
+        touched: set[tuple[str, str]] = set()
+        for i in holders.pop((l, r)):
+            cnt = cnts[i]
+            old = Counter(zip(words[i], words[i][1:]))
+            words[i] = _merge_word(words[i], l, r)
+            new = Counter(zip(words[i], words[i][1:]))
+            for p, k in old.items():
+                pair_n[p] -= k * cnt
+                if p not in new and p in holders:
+                    holders[p].discard(i)
+            for p, k in new.items():
+                pair_n[p] += k * cnt
+                holders[p].add(i)
+            touched.update(old, new)
+        for p in touched:
+            if pair_n[p] > 0:
+                heapq.heappush(heap, (-pair_n[p], p))
+            else:
+                del pair_n[p]
+    return merges
+
+
+def _bpe_kernel(n_merges: int):
+    """mapInArrow kernel for the single-task path: gathers every word
+    type of its (one) partition, runs ``_greedy_merges`` and emits the
+    merge table, then the segmented types (``_KERNEL_SCHEMA``)."""
+
+    def run(batches):
+        words: list[list[str]] = []
+        cnts: list[int] = []
+        for b in batches:
+            words += b.column("syms").to_pylist()
+            cnts += b.column("cnt").to_pylist()
+        merges = _greedy_merges(words, cnts, n_merges)
+        none_m, none_w = [None] * len(merges), [None] * len(words)
+        merge_cols = [list(c) + none_w for c in zip(*merges)] or [none_w] * 4
+        table = pa.table(
+            [*merge_cols, none_m + words, none_m + cnts], schema=_KERNEL_ARROW
+        )
+        yield from table.to_batches(max_chunksize=65_536)
+
+    return run
+
+
 def _train(
     df: DataFrame,
     n_merges: int,
@@ -100,9 +214,15 @@ def _train(
     ``end_of_word`` sentinel symbol (standard: prevents merges
     across word boundaries from absorbing prefixes of other words).
 
-    Driver work per iteration: ONE collected row (the argmax pair).
-    Executor work per iteration: pair explode + hash aggregate + the
-    merge fold, all on the vocabulary-bounded type frame."""
+    The type frame is checkpointed once (its size observed on that
+    job). Within the budget, one task runs all k merges
+    (``_bpe_kernel``) and its output is checkpointed with the merge
+    table riding the job as an observed ``collect_list``: three Spark
+    jobs in all, whatever k is. Above the budget, the distributed loop
+    runs: driver work per iteration is ONE collected row (the argmax
+    pair); executor work per iteration is pair explode + hash
+    aggregate + the merge fold, all on the vocabulary-bounded type
+    frame."""
     types = (
         df.select(F.explode(tokens_col(text_col)).alias("w"))
         # empty/whitespace-only documents tokenize to [''] — drop the
@@ -125,15 +245,31 @@ def _train(
         # shuffle
         .coalesce(8)
     )
+    # bytes of the type frame as the kernel holds it: symbol octets,
+    # one offset per symbol, the count and the list offset per type
+    type_bytes = (
+        F.octet_length(F.array_join("syms", "")) + 4 * F.size("syms") + 12
+    )
+    current, fits = _fits_one_task(types, type_bytes)
+    if fits:
+        seen = Observation()
+        out = (
+            current.coalesce(1)
+            .mapInArrow(_bpe_kernel(n_merges), _KERNEL_SCHEMA)
+            .observe(
+                seen,
+                F.collect_list(
+                    F.when(
+                        F.col("step").isNotNull(),
+                        F.struct("step", "l", "r", "n"),
+                    )
+                ).alias("merges"),
+            )
+            .localCheckpoint()
+        )
+        merges = sorted(tuple(m) for m in seen.get["merges"])
+        return merges, out.filter(F.col("step").isNull()).select("syms", "cnt")
     merges: list[tuple[int, str, str, int]] = []
-    # localCheckpoint: truncate the lineage each step so the plan
-    # doesn't grow k folds deep (same pattern as connected
-    # components' iteration). eager=False — the checkpoint
-    # materializes inside the next step's argmax job instead of
-    # scheduling a second job per iteration (halves job count; wall
-    # time is compile-dominated at toy SF, so the win shows at real
-    # vocabulary sizes, not the 31-type test corpus)
-    current = types.localCheckpoint(eager=False)
     for step in range(1, n_merges + 1):
         top = (
             current.select(F.explode(_pairs_expr()).alias("p"), "cnt")
@@ -147,6 +283,11 @@ def _train(
             break  # nothing left worth merging
         l, r, n = top[0]["l"], top[0]["r"], int(top[0]["n"])
         merges.append((step, l, r, n))
+        # localCheckpoint: truncate the lineage each step so the plan
+        # doesn't grow k folds deep (same pattern as connected
+        # components' iteration). eager=False — the checkpoint
+        # materializes inside the next step's argmax job instead of
+        # scheduling a second job per iteration
         current = current.select(
             _merge_expr(l, r).alias("syms"), "cnt"
         ).localCheckpoint(eager=False)

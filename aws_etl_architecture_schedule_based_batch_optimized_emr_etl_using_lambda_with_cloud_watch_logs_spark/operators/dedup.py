@@ -25,10 +25,18 @@ from hashlib import blake2b
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    IntegerType,
+    IntegralType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 # ---------------------------------------------------------------- exact
 
@@ -923,21 +931,107 @@ def simhash_dedup(
 # ------------------------------------------------ dedup cluster graph
 
 
+def _fits_one_task(df: DataFrame, row_bytes: Column) -> tuple[DataFrame, bool]:
+    """Materialize ``df`` with an eager ``localCheckpoint`` and say
+    whether it fits the single-task budget. Its size, ``sum(row_bytes)``,
+    is an ``Observation`` riding the checkpoint job, so deciding adds
+    no job. The budget is ``spark.sql.autoBroadcastJoinThreshold``: a
+    frame small enough to ship to every executor is small enough for
+    one task; -1 (broadcast off) keeps every input on the distributed
+    path. Returns (the checkpointed frame, fits)."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    budget = conf.autoBroadcastJoinThreshold()
+    size = Observation()
+    ckpt = df.observe(size, F.sum(row_bytes).alias("bytes")).localCheckpoint()
+    return ckpt, 0 <= (size.get["bytes"] or 0) <= budget
+
+
+def _min_roots(n: int, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Min-root union-find over ``n`` nodes and the edges (a[i], b[i]),
+    vectorized: every round hooks the larger root of each edge whose
+    ends still differ under the smaller (``minimum.at``, so a root
+    takes its smallest candidate), then compresses every path to its
+    root. parent[i] <= i throughout, so the root a component ends on
+    is its minimum node; each round retires at least one root."""
+    parent = np.arange(n)
+    while True:
+        ra, rb = parent[a], parent[b]
+        open_ = ra != rb
+        if not open_.any():
+            return parent
+        np.minimum.at(
+            parent, np.maximum(ra, rb)[open_], np.minimum(ra, rb)[open_]
+        )
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _components_kernel(batches):
+    """mapInArrow kernel for the single-task path of
+    ``connected_components``: gathers every (src, dst) edge of its
+    (one) partition and emits (doc_id, cluster_id) for every node,
+    cluster_id = the minimum id of its component. Ids are sorted into
+    dense indices (``np.unique``), so the min-index root is the min-id
+    one. Like the distributed loop, a NULL end joins no edge and NULL
+    is a node of its own, labelled NULL."""
+    src, dst = [], []
+    for b in batches:
+        src.append(b.column(0))
+        dst.append(b.column(1))
+    if not src:
+        return
+    id_type = src[0].type
+    src, dst = pa.concat_arrays(src), pa.concat_arrays(dst)
+    both = pc.and_(src.is_valid(), dst.is_valid())
+    ids = np.unique(
+        np.concatenate(
+            [
+                src.drop_null().to_numpy(zero_copy_only=False),
+                dst.drop_null().to_numpy(zero_copy_only=False),
+            ]
+        )
+    )
+    roots = _min_roots(
+        len(ids),
+        np.searchsorted(ids, src.filter(both).to_numpy(zero_copy_only=False)),
+        np.searchsorted(ids, dst.filter(both).to_numpy(zero_copy_only=False)),
+    )
+    cols = [pa.array(ids, id_type), pa.array(ids[roots], id_type)]
+    if src.null_count or dst.null_count:
+        cols = [pa.concat_arrays([c, pa.nulls(1, id_type)]) for c in cols]
+    table = pa.table(cols, names=["doc_id", "cluster_id"])
+    yield from table.to_batches(max_chunksize=65_536)
+
+
 def connected_components(
     pairs: DataFrame,
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 30,
 ) -> DataFrame:
-    """Connected components of the near-dup pair graph by min-label
-    propagation WITH pointer jumping: each round a node takes the min
-    of (its label, its neighbors' labels, its label's label). The
-    neighbor step alone needs diameter rounds — a length-d dup chain
-    would need d iterations; the label-of-label shortcut doubles the
-    effective propagation distance per round, so convergence is
-    O(log diameter) (a 64-node path converges in ~7 rounds, test-
-    pinned). Convergence detector: the global label sum, strictly
-    decreasing while any label can improve.
+    """Connected components of the near-dup pair graph. Returns
+    (doc_id, cluster_id) for every node that appears in ``pairs``;
+    cluster_id = min node id in the component. Ids keep the pair
+    columns' (common) type.
+
+    The edge frame is checkpointed once, its size observed on that
+    job (``_fits_one_task``). Within the budget and with integral ids,
+    ONE executor task runs a min-root union-find over all edges
+    (``_components_kernel``) and its output is checkpointed: two Spark
+    jobs on a checkpointed input, whatever the diameter.
+
+    Above the budget (or with non-integral ids) the distributed loop
+    runs: min-label propagation WITH pointer jumping — each round a
+    node takes the min of (its label, its neighbors' labels, its
+    label's label). The neighbor step alone needs diameter rounds —
+    a length-d dup chain would need d iterations; the label-of-label
+    shortcut doubles the effective propagation distance per round, so
+    convergence is O(log diameter) (a 64-node path converges in ~7
+    rounds, test-pinned). Convergence detector: the global label sum,
+    strictly decreasing while any label can improve.
 
     Each round is two joins + one shuffle of the (tiny relative to
     the corpus) edge/label frames. ``localCheckpoint`` truncates the
@@ -953,14 +1047,34 @@ def connected_components(
     job — the form on which the driver's 32-core bench regressed
     knn_components_docs 0.78×; the r14 interleaved A/B at local[32]
     read init-eager ≤ all-lazy in 3 of 4 reps (min 3.42 vs 3.52 s,
-    medians 4.1 vs 4.5 s) with the in-loop fusion retained. Returns
-    (node, cluster_id) for every node that appears in ``pairs``;
-    cluster_id = min node id in the component.
+    medians 4.1 vs 4.5 s) with the in-loop fusion retained.
     """
+    edges = pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+    # the union's widened type (int + bigint -> bigint), as the
+    # distributed loop's node column has it
+    id_type = edges.select("src").union(edges.select("dst")).schema[0].dataType
+    edges, fits = _fits_one_task(
+        edges.select(F.col("src").cast(id_type), F.col("dst").cast(id_type)),
+        # two ids as the kernel holds them (int64)
+        F.lit(16),
+    )
+    if fits and isinstance(id_type, IntegralType):
+        return (
+            edges.coalesce(1)
+            .mapInArrow(
+                _components_kernel,
+                StructType(
+                    [
+                        StructField("doc_id", id_type),
+                        StructField("cluster_id", id_type),
+                    ]
+                ),
+            )
+            .localCheckpoint()
+        )
     sym = (
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(
-            pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+        edges.union(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .distinct()
         .localCheckpoint()

@@ -2299,6 +2299,46 @@ def test_novelty_scores_extremes(spark):
     assert out[3].novel_frac == 0.75
 
 
+def test_novelty_scores_short_docs_keep_their_row(spark):
+    """A document shorter than n tokens has no n-gram: it falls back to
+    ONE whole-text shingle (``ngrams_col``), as in the oracle. Pins
+    the left join of the per-doc shingle counts onto the df=1 slice:
+    a short doc whose gram another doc shares has no novel row to
+    join, and must keep its row with n_novel 0, as the oracle's
+    inner join over its shingles gives it."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    rows = [
+        (0, "a b c d e f"),
+        (1, "x y"),       # short, unique -> its one shingle is novel
+        (2, "p q"),       # short, shared with doc 3 -> nothing novel
+        (3, "p q"),
+        (4, "solo"),
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r.doc_id: (r.n_shingles, r.n_novel, r.novel_frac)
+        for r in X.novelty_scores(d, n=3).collect()
+    }
+    assert got == {
+        0: (4, 4, 1.0),
+        1: (1, 1, 1.0),
+        2: (1, 0, 0.0),
+        3: (1, 0, 0.0),
+        4: (1, 1, 1.0),
+    }
+    con = duckdb.connect()
+    con.sql(
+        "CREATE TABLE documents AS SELECT * FROM (VALUES "
+        + ", ".join(f"({i}, '{t}')" for i, t in rows)
+        + ") AS v(doc_id, text)"
+    )
+    oracle = {r[0]: tuple(r[1:]) for r in con.sql(entry.NOVELTY_SQL).fetchall()}
+    assert oracle == got
+
+
 def test_fuzzy_decontam_orientation_and_near_match(spark):
     from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.operators import (
         decontam as DC,

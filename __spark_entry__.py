@@ -86,6 +86,9 @@ from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_wi
 from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.operators import (
     graph as GR,
 )
+from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.functions.frames import (
+    local_frame,
+)
 from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.operators.flatten import (
     flatten,
 )
@@ -7998,8 +8001,8 @@ def drift_multibatch_pipeline(spark, sf_dir):
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         spark.sql(f"DROP DATABASE IF EXISTS `{db}` CASCADE")
-    return spark.createDataFrame(
-        rows, "batch_id int, catalog_action string, rows_written bigint"
+    return local_frame(
+        spark, rows, "batch_id int, catalog_action string, rows_written bigint"
     )
 
 

@@ -35,6 +35,7 @@ from collections import Counter, defaultdict
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from ..functions.frames import local_frame
 from .dedup import _fits_one_task, tokens_col
 
 # the single-task kernel's output: the merge table rows (step set)
@@ -401,6 +402,6 @@ def bpe_merge_table(
     frame."""
     spark = df.sparkSession
     rows = bpe_train(df, n_merges, text_col)
-    return spark.createDataFrame(
-        rows, "step int, left string, right string, n bigint"
+    return local_frame(
+        spark, rows, "step int, left string, right string, n bigint"
     )

@@ -404,8 +404,10 @@ def _parallelize_narrow(df: DataFrame) -> DataFrame:
     scale inputs already have enough partitions and this is a no-op.
     """
     # Cap the fan-out: each concurrent python task costs a worker
-    # process (pandas/numpy import, ~50 MB); 8 ways saturates the
-    # per-doc kernels at local scale without a worker storm.
+    # process: one that has run a mapInPandas task holds 107 MB RSS,
+    # 76 MB PSS, 46 MB of it private (measured on CPython 3.11,
+    # pyspark 4.1). 8 ways saturates the per-doc kernels at local
+    # scale without a worker storm.
     target = min(8, df.sparkSession.sparkContext.defaultParallelism)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)

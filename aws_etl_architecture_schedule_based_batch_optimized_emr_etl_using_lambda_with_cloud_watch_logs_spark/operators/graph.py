@@ -50,6 +50,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
+
 
 def _banded_rows(
     base: DataFrame,
@@ -428,8 +430,8 @@ def knn_edges_lsh(
     if first is None:
         # empty input (upstream filter/sample produced zero rows):
         # return an empty edge frame instead of subscripting None
-        return base.sparkSession.createDataFrame(
-            [], "src bigint, dst bigint, rank int"
+        return local_frame(
+            base.sparkSession, [], "src bigint, dst bigint, rank int"
         )
     dim = first["d"]
     # Corpus mean as ONE posexplode → (dim) hash-aggregate expression

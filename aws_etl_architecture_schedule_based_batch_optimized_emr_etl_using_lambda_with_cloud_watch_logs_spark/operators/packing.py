@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from ..functions.frames import local_frame
 from .dedup import tokens_col
 
 PACK_SCHEMA = StructType(
@@ -345,7 +346,7 @@ def write_training_shards(
     # materialize the read-back agg BEFORE overwriting _manifest so
     # a stale manifest can never feed its own replacement
     rows = manifest.collect()
-    out = df.sparkSession.createDataFrame(rows, manifest.schema)
+    out = local_frame(df.sparkSession, rows, manifest.schema)
     out.coalesce(1).write.mode("overwrite").parquet(f"{path}/_manifest")
     return out
 

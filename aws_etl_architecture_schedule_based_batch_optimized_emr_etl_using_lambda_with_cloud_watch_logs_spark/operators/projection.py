@@ -29,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..functions.frames import local_frame
+
 
 def _sign(j: int, k: int) -> int:
     """±1 from the first byte of md5("k:j") — tiny host-side helper
@@ -405,7 +407,8 @@ def pq_topk(
         F.col(id_col).alias("n_id"), dvec.alias("_fn")
     )
     spark = embeddings.sparkSession
-    qf = spark.createDataFrame(
+    qf = local_frame(
+        spark,
         [(int(q_ids[i]), [float(x) for x in q_mat[i]]) for i in range(len(q_ids))],
         f"q_id bigint, _fq array<double>",
     )

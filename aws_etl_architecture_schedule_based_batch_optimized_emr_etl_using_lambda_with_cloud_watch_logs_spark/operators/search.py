@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from .dedup import tokens_col
 
 
@@ -119,7 +120,8 @@ def bm25_topk(
         index if index is not None else term_index(docs, id_col, text_col)
     )
 
-    q_terms = spark.createDataFrame(
+    q_terms = local_frame(
+        spark,
         [
             (qid, t)
             for qid, qtext in queries
@@ -219,7 +221,8 @@ def prf_expand_topk(
     tf, meta, df_ = (
         index if index is not None else term_index(docs, id_col, text_col)
     )
-    q_terms = spark.createDataFrame(
+    q_terms = local_frame(
+        spark,
         [
             (qid, t)
             for qid, qtext in queries
@@ -484,7 +487,8 @@ def hybrid_rrf_topk(
         F.col("dot").cast("double") * F.col("dot").cast("double")
     ) / (F.col("na").cast("double") * F.col("nb").cast("double"))
     wv = Window.partitionBy("q_id").orderBy(skey.desc(), F.col("n_id").asc())
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [(int(q_ids[i]), queries[i][0]) for i in range(len(queries))],
         "q_id bigint, query_id string",
     )

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.frames import local_frame
+
 # ---------------------------------------------------- HOF column forms
 # (JVM-side but interpreted per element — fine for few/small arrays,
 # not the hot path.)
@@ -476,7 +478,8 @@ def lsh_index_write(
     corpus = _lsh_bucketed_corpus(embeddings, tables, id_col, vec_col)
     corpus.write.mode("overwrite").partitionBy("table").parquet(path)
     spark = embeddings.sparkSession
-    meta_df = spark.createDataFrame(
+    meta_df = local_frame(
+        spark,
         [(int(dim), int(n_planes), int(n_tables), int(seed))],
         "dim int, n_planes int, n_tables int, seed int",
     )
@@ -633,12 +636,11 @@ def ivf_topk(
         order = np.argsort(-(centroids @ q_unit))[: min(n_probe, len(centroids))]
         for c in order:
             probe_rows.append((int(row[0]), list(map(float, row[1])), int(c)))
-    # pandas → Arrow conversion stays JVM-side; a plain python list
-    # would take the pickle-RDD path with defaultParallelism slices,
-    # spawning a python worker per slice for 60 rows.
-    queries = spark.createDataFrame(
-        pd.DataFrame(probe_rows, columns=["q_id", "q_vec", "cell"]),
-        "q_id long, q_vec array<double>, cell long",
+    # an Arrow literal frame: no Python task per action (a plain list
+    # would run one per defaultParallelism slice), and unlike a
+    # pandas frame it keeps a NaN vector element NaN, not NULL
+    queries = local_frame(
+        spark, probe_rows, "q_id long, q_vec array<double>, cell long"
     )
 
     scored = (

@@ -5,6 +5,15 @@ but unused (``emr_json_parquet_schema_drift_etl.py:287-292`` — the sink
 write at :340-343 uses the default parquet source). Our builder targets
 modern Spark (4.x): AQE on, Arrow on, UTC, shuffle partitions sized to
 the machine instead of the 200 default.
+
+Python workers start from this package's ``worker_daemon`` module
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``. Before
+CPython 3.13, ``pyspark.daemon`` re-reads the directory of every zip
+archive on the workers' path at the start of every task (~26.7k
+entries over ~16 importers) and keeps one copy per importer; the
+module skips that re-read and changes nothing else (see its
+docstring). It therefore has to be importable on the workers, like
+every Python function this package ships to them.
 """
 
 from __future__ import annotations
@@ -52,6 +61,7 @@ def get_spark(
         # stay compiled.
         .config("spark.sql.codegen.maxFields", "2000")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     for key, value in (extra_conf or {}).items():

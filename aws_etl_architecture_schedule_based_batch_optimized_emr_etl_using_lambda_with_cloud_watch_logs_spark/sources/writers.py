@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
+
 
 def delta_available() -> bool:
     """True when the delta-spark package is importable. Delta gives
@@ -472,7 +474,7 @@ def merge_upsert(
             rel = rel[len(root):].lstrip("/")
             if not any(s.startswith(("_", ".")) for s in rel.split("/")):
                 raise exc  # data files present: a real read failure
-        existing = spark.createDataFrame([], updates.schema)
+        existing = local_frame(spark, [], updates.schema)
     finally:
         spark.conf.set(infer_key, prev_infer)
     survivors = existing.filter(cond).join(

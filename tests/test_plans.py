@@ -21,7 +21,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_no_cartesian_no_row_python_anywhere(spark):
     """Every query's plan: no CartesianProduct, no row-at-a-time
-    Python, and EXACTLY the reviewed number of Arrow stages (r07
+    Python, no pickle-RDD literal frame (``Scan ExistingRDD``), and
+    EXACTLY the reviewed number of Arrow stages (r07
     verdict task #4 — a membership-only allowlist let an allowlisted
     query grow a second, unreviewed Arrow stage without failing
     CI)."""
@@ -32,6 +33,8 @@ def test_no_cartesian_no_row_python_anywhere(spark):
             bad[name] = "CartesianProduct"
         if row["row_python"]:
             bad[name] = "BatchEvalPython (row-at-a-time Python UDF)"
+        if row["pickle_rdd"]:
+            bad[name] = "Scan ExistingRDD over a pickle-RDD literal frame"
         expected = ARROW_STAGE_EXPECTED.get(name, 0)
         if row["n_arrow_stages"] != expected:
             bad[name] = (
@@ -192,3 +195,27 @@ def test_arrow_stage_count_is_execution_stable(spark):
     n_before = arrow_stage_count(executed)
     executed.count()
     assert arrow_stage_count(executed) == n_before == 1
+
+
+def test_pickle_rdd_scans_tells_literals_from_checkpoints(spark):
+    """Self-test of the literal-frame rule: a ``createDataFrame(list)``
+    scan counts (also joined, and after it executes), a
+    ``localCheckpoint`` scan — the same ``Scan ExistingRDD`` node
+    name — does not, nor does an Arrow-built ``local_frame``."""
+    from plan_audit import pickle_rdd_scans
+
+    from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.functions.frames import (
+        local_frame,
+    )
+
+    rows, schema = [(1, "a"), (2, "b")], "id bigint, s string"
+    literal = spark.createDataFrame(rows, schema)
+    assert pickle_rdd_scans(literal) == 1
+    joined = spark.range(3).join(literal, "id")
+    assert pickle_rdd_scans(joined) == 1
+    joined.collect()
+    assert pickle_rdd_scans(joined) == 1
+    checkpointed = spark.range(3).localCheckpoint()
+    assert "Scan ExistingRDD" in formatted_plan(checkpointed)
+    assert pickle_rdd_scans(checkpointed) == 0
+    assert pickle_rdd_scans(local_frame(spark, rows, schema)) == 0

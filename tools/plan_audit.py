@@ -8,6 +8,11 @@ plan against the 100 TB posture rules:
 * no ``BatchEvalPython`` (row-at-a-time Python UDF) anywhere — Python
   stages must be Arrow-vectorized (``MapInPandas`` / ``ArrowEval`` /
   ``FlatMapGroupsInPandas``);
+* no pickle-RDD literal frame: a ``Scan ExistingRDD`` whose RDD comes
+  from ``spark.createDataFrame(list)`` runs one Python task per slice
+  on every action; build it with ``functions.frames.local_frame`` (a
+  ``LocalTableScan``) instead. ``localCheckpoint`` scans print the
+  same node name and are allowed (see pickle_rdd_scans);
 * parquet scans should carry ``PushedFilters`` whenever the query
   filters on a base column (reported, since some filters — e.g. on
   derived values — legitimately cannot push);
@@ -179,6 +184,32 @@ def arrow_stage_count(df) -> int:
     return len(sigs)
 
 
+def pickle_rdd_scans(df) -> int:
+    """``Scan ExistingRDD`` nodes (RDDScanExec) whose RDD lineage holds
+    a ``PythonRDD``: the pickled-list scan of
+    ``spark.createDataFrame(list)``. A ``localCheckpoint`` also plans
+    as ``Scan ExistingRDD``, but its lineage is the checkpoint's own
+    RDDs (or, while a lazy checkpoint is pending, whatever it cuts —
+    flagged only if that holds a pickle-RDD literal). Walks the
+    current physical plan through AQE wrappers, query stages and
+    cached relations."""
+    n_scans, stack = 0, [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif kind == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        elif kind == "RDDScanExec" and "PythonRDD[" in node.rdd().toDebugString():
+            n_scans += 1
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return n_scans
+
+
 def audit_one(name: str, df) -> dict:
     plan = formatted_plan(df)
     # formatted mode shows each node in the tree AND a numbered
@@ -190,6 +221,7 @@ def audit_one(name: str, df) -> dict:
         "query": name,
         "cartesian": "CartesianProduct" in plan,
         "row_python": "BatchEvalPython" in plan,
+        "pickle_rdd": "Scan ExistingRDD" in plan and pickle_rdd_scans(df) > 0,
         "n_arrow_stages": arrow_stage_count(df),
         "codegen_spans": len(set(re.findall(r"\[codegen id : (\d+)\]", plan))),
         "n_scans": len(scans),
@@ -220,6 +252,9 @@ def main() -> None:
             violations.append(name)
         if row["row_python"]:
             flags.append("ROW-PYTHON")
+            violations.append(name)
+        if row["pickle_rdd"]:
+            flags.append("PICKLE-RDD-SCAN")
             violations.append(name)
         expected = ARROW_STAGE_EXPECTED.get(name, 0)
         if row["n_arrow_stages"] != expected:

@@ -18,6 +18,11 @@ recall vs the exact answer, invariant flags, batch twins — so EVERY
 queries() entry carries a full DuckDB oracle (len(queries()) ==
 len(oracle_sql()), pinned by tests); none fall back to the driver's
 weaker rows-only check.
+
+A gate is declared once, as one row of the ``GATES`` table at the end
+of this module: ``Gate(plan, oracle, bench=True)``, keyed by the plan
+function's name. ``queries()``, ``oracle_sql()`` and the set of gates
+``bench.py`` times are all read from that table.
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -8037,7 +8043,7 @@ def _gate_order() -> list[str]:
     check (stalest first), then the unchanged backlog (stalest
     first). Checked in as ``tools/gate_order.json`` so the ordering
     is the tool's output, not curated prose (r06/r07 verdict task
-    #1). Missing/garbled file → registry order (registry is complete
+    #1). Missing/garbled file → table order (the table is complete
     either way; the order only steers which rows the driver's ~50/
     round budget refreshes)."""
     path = os.path.join(
@@ -8051,417 +8057,254 @@ def _gate_order() -> list[str]:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered for the driver's correctness gate, which checks entries
-    front-to-back under a budget (~50/round). The order is NOT hand-
-    curated: the literal dict below is the name->callable registry
-    (gate_deps.py parses it by AST to map gates to their code), and
-    the returned dict is re-keyed by ``tools/gate_order.json`` —
-    regenerate with ``python tools/gate_deps.py --write`` after
-    adding gates or landing driver results, so each round's window
-    drains the stalest/changed-code rows first instead of
-    re-checking last round's.
+    """Every gate's plan function, keyed by gate name (one ``GATES``
+    row per gate). Ordered for the driver's correctness gate, which
+    checks entries front-to-back under a budget (~50/round): the
+    order is re-keyed by ``tools/gate_order.json`` — regenerate with
+    ``python tools/gate_deps.py --write`` after adding gates or
+    landing driver results, so each round's window drains the
+    stalest/changed-code rows first instead of re-checking last
+    round's. Gates missing from that file follow in table order.
     """
-    registry = {
-        "text_diversity_docs": text_diversity_docs,
-        "text_zipf_docs": text_zipf_docs,
-        "text_pmi_docs": text_pmi_docs,
-        "source_overlap_docs": source_overlap_docs,
-        "chunk_docs_rag": chunk_docs_rag,
-        "pack_boundaries_docs": pack_boundaries_docs,
-        "sim_topk_rp": sim_topk_rp,
-        "sim_topk_sq": sim_topk_sq,
-        "sim_topk_pq": sim_topk_pq,
-        "matryoshka_recall_vecs": matryoshka_recall_vecs,
-        "embed_centroid_eval": embed_centroid_eval,
-        "prf_expand_docs": prf_expand_docs,
-        "mmr_rerank_docs": mmr_rerank_docs,
-        "sim_topk_bruteforce": sim_topk_bruteforce,
-        "hard_negatives_vecs": hard_negatives_vecs,
-        "sim_topk_lsh": sim_topk_lsh,
-        "sim_topk_ivf": sim_topk_ivf,
-        "seq_packing_docs": seq_packing_docs,
-        "quality_percentile_docs_sf01": quality_percentile_docs_sf01,
-        "kn_bigram_model_docs_sf01": kn_bigram_model_docs_sf01,
-        "quality_percentile_docs": quality_percentile_docs,
-        "kn_bigram_model_docs": kn_bigram_model_docs,
-        "doremi_weights_docs": doremi_weights_docs,
-        "length_packing_docs": length_packing_docs,
-        "triplet_mining_vecs": triplet_mining_vecs,
-        "cdc_chunks_docs": cdc_chunks_docs,
-        "purge_audit_docs": purge_audit_docs,
-        "stream_incremental_dedup_docs": stream_incremental_dedup_docs,
-        "stream_incremental_dedup_docs_sf01": stream_incremental_dedup_docs_sf01,
-        "span_clean_docs": span_clean_docs,
-        "events_sessionize": events_sessionize,
-        "events_range_join": events_range_join,
-        "array_agg_nations": array_agg_nations,
-        "dedup_simhash_pairs": dedup_simhash_pairs,
-        "dedup_winnow_pairs": dedup_winnow_pairs,
-        "decontam_docs": decontam_docs,
-        "text_pii_redact": text_pii_redact,
-        "boilerplate_ngrams_docs": boilerplate_ngrams_docs,
-        "events_session_window": events_session_window,
-        "text_repetition_docs": text_repetition_docs,
-        "dedup_incremental_docs": dedup_incremental_docs,
-        "dedup_incremental_docs_sf01": dedup_incremental_docs_sf01,
-        "span_dedup_docs": span_dedup_docs,
-        "bloom_decontam_docs": bloom_decontam_docs,
-        "bm25_search_docs": bm25_search_docs,
-        "rag_hash_retrieval_docs": rag_hash_retrieval_docs,
-        "knn_graph_docs": knn_graph_docs,
-        "pagerank_docs": pagerank_docs,
-        "rrf_fusion_docs": rrf_fusion_docs,
-        "knn_components_docs": knn_components_docs,
-        "knn_graph_lsh_docs": knn_graph_lsh_docs,
-        "events_anomaly_daily": events_anomaly_daily,
-        "stream_anomaly_counts": stream_anomaly_counts,
-        "graph_walks_docs": graph_walks_docs,
-        "knn_triangles_docs": knn_triangles_docs,
-        "data_quality_audit": data_quality_audit,
-        "scd2_customers": scd2_customers,
-        "exists_window_orders": exists_window_orders,
-        "merge_upsert_orders": merge_upsert_orders,
-        "drift_multibatch_pipeline": drift_multibatch_pipeline,
-        "k_anonymity_customers": k_anonymity_customers,
-        "incremental_agg_orders": incremental_agg_orders,
-        "reservoir_sample_docs": reservoir_sample_docs,
-        "classifier_score_docs": classifier_score_docs,
-        "stratified_exact_docs": stratified_exact_docs,
-        "semantic_dedup_vecs": semantic_dedup_vecs,
-        "lm_perplexity_docs": lm_perplexity_docs,
-        "text_entropy_docs": text_entropy_docs,
-        "dsir_resample_docs": dsir_resample_docs,
-        "gopher_filter_docs": gopher_filter_docs,
-        "ccnet_buckets_docs": ccnet_buckets_docs,
-        "events_hopping_window": events_hopping_window,
-        "drift_tokens_docs": drift_tokens_docs,
-        "text_novelty_docs": text_novelty_docs,
-        "decontam_fuzzy_docs": decontam_fuzzy_docs,
-        "dataset_card_docs": dataset_card_docs,
-        "dedup_best_quality_docs": dedup_best_quality_docs,
-        "hll_incremental_orders": hll_incremental_orders,
-        "rp_project_vecs": rp_project_vecs,
-        "tfidf_keywords_docs": tfidf_keywords_docs,
-        "stream_windowed_counts": stream_windowed_counts,
-        "stream_dedup_counts": stream_dedup_counts,
-        "keyset_paged_orders": keyset_paged_orders,
-        "mix_sample_docs": mix_sample_docs,
-        "embed_label_spectrum": embed_label_spectrum,
-        "paged_orders": paged_orders,
-        "agg_mode_bits": agg_mode_bits,
-        "sample_hash_orders": sample_hash_orders,
-        "stratified_sample_orders": stratified_sample_orders,
-        "histogram_totalprice": histogram_totalprice,
-        "string_agg_regions": string_agg_regions,
-        "regexp_funcs_parts": regexp_funcs_parts,
-        "window_lag_lead": window_lag_lead,
-        "window_ntile_stats": window_ntile_stats,
-        "window_range_frame": window_range_frame,
-        "window_rank_customers": window_rank_customers,
-        "window_running_spend": window_running_spend,
-        "posexplode_part_words": posexplode_part_words,
-        "map_pivot_priorities": map_pivot_priorities,
-        "pivot_status_by_priority": pivot_status_by_priority,
-        "weekly_gapfill_orders": weekly_gapfill_orders,
-        "embed_cluster_vecs": embed_cluster_vecs,
-        "q1_pricing_summary": q1_pricing_summary,
-        "q12_ship_delay": q12_ship_delay,
-        "try_cast_events": try_cast_events,
-        "multimodal_features_docs": multimodal_features_docs,
-        "dedup_exact_docs": dedup_exact_docs,
-        "dedup_keep_first_docs": dedup_keep_first_docs,
-        "dedup_ngram_pairs": dedup_ngram_pairs,
-        "dedup_minhash_pairs_sf01": dedup_minhash_pairs_sf01,
-        "dedup_cluster_docs_sf01": dedup_cluster_docs_sf01,
-        "dedup_simhash_pairs_sf01": dedup_simhash_pairs_sf01,
-        "dedup_winnow_pairs_sf01": dedup_winnow_pairs_sf01,
-        "dedup_cluster_docs": dedup_cluster_docs,
-        "curation_pipeline_docs": curation_pipeline_docs,
-        "skew_salted_token_counts": skew_salted_token_counts,
-        "snapshot_diff_orders": snapshot_diff_orders,
-        "dq_checks_orders": dq_checks_orders,
-        "text_quality_docs": text_quality_docs,
-        "text_langid_docs": text_langid_docs,
-        "text_fingerprint_docs": text_fingerprint_docs,
-        "text_bpe_token_stats": text_bpe_token_stats,
-        "bpe_vocab_docs": bpe_vocab_docs,
-        "bpe_symbols_docs": bpe_symbols_docs,
-        "bpe_doc_tokens_docs": bpe_doc_tokens_docs,
-        "curriculum_stages_docs": curriculum_stages_docs,
-        "text_token_freq": text_token_freq,
-        "sim_neardup_exact": sim_neardup_exact,
-        "embed_label_stats": embed_label_stats,
-        "embed_centroids": embed_centroids,
-        "embed_silhouette_vecs": embed_silhouette_vecs,
-        "topk_orders": topk_orders,
-        "setops_customers": setops_customers,
-        "unpivot_lineitem_measures": unpivot_lineitem_measures,
-        "setops_intersect_except": setops_intersect_except,
-        "join_null_safe_segments": join_null_safe_segments,
-        "agg_minby_maxby": agg_minby_maxby,
-        "string_funcs_parts": string_funcs_parts,
-        "date_funcs_orders": date_funcs_orders,
-        "json_extract_events": json_extract_events,
-        "events_tumbling_window": events_tumbling_window,
-        "events_asof_join": events_asof_join,
-        "events_funnel_users": events_funnel_users,
-        "events_cohort_retention": events_cohort_retention,
-        "events_rollup_day": events_rollup_day,
-        "flatten_restructure": flatten_restructure,
-        "partition_specs_orders": partition_specs_orders,
-        "union_by_name_customers": union_by_name_customers,
-        "hof_exists_forall_docs": hof_exists_forall_docs,
-        "hof_array_embeddings": hof_array_embeddings,
-        "fuzzy_levenshtein_parts": fuzzy_levenshtein_parts,
-        "join_anti_customers": join_anti_customers,
-        "join_semi_suppliers": join_semi_suppliers,
-        "join_outer_order_counts": join_outer_order_counts,
-        "agg_distinct_per_flag": agg_distinct_per_flag,
-        "rollup_orders": rollup_orders,
-        "cube_lineitem": cube_lineitem,
-        "conditional_agg_priorities": conditional_agg_priorities,
-        "agg_approx_distinct": agg_approx_distinct,
-        "approx_quantile_orders": approx_quantile_orders,
-        "math_funcs_lineitem": math_funcs_lineitem,
-        "cond_exprs_customers": cond_exprs_customers,
-        "percentile_orders": percentile_orders,
-        "stats_agg_lineitem": stats_agg_lineitem,
-        "scalar_subquery_small_orders": scalar_subquery_small_orders,
-        "sql_grouping_sets": sql_grouping_sets,
-        "q3_shipping_priority": q3_shipping_priority,
-        "q5_region_revenue": q5_region_revenue,
-        "q7_volume_shipping": q7_volume_shipping,
-        "q8_market_share": q8_market_share,
-        "q9_product_profit": q9_product_profit,
-        "q21_waiting_suppliers": q21_waiting_suppliers,
-        "q15_top_supplier": q15_top_supplier,
-        "q20_chained_semi": q20_chained_semi,
-        "q2_min_unit_price": q2_min_unit_price,
-        "q4_late_orders": q4_late_orders,
-        "q6_forecast_revenue": q6_forecast_revenue,
-        "q10_returned_revenue": q10_returned_revenue,
-        "q11_important_values": q11_important_values,
-        "q13_order_distribution": q13_order_distribution,
-        "q14_promo_share": q14_promo_share,
-        "q16_supplier_cnt": q16_supplier_cnt,
-        "q17_small_quantity": q17_small_quantity,
-        "q18_large_orders": q18_large_orders,
-        "q19_disjunctive": q19_disjunctive,
-        "q22_global_sales": q22_global_sales,
-        "multimodal_decode_real": multimodal_decode_real,
-        "dedup_paragraph_docs": dedup_paragraph_docs,
-        "weighted_sample_docs": weighted_sample_docs,
-        "leakage_split_docs": leakage_split_docs,
-        "token_budget_mix_docs": token_budget_mix_docs,
-        "agg_countmin_tokens": agg_countmin_tokens,
-        "shard_manifest_docs": shard_manifest_docs,
-        "stream_sessionize_counts": stream_sessionize_counts,
-        "stream_interval_join_counts": stream_interval_join_counts,
-        "stream_enrich_counts": stream_enrich_counts,
-    }
-    ordered = {k: registry[k] for k in _gate_order() if k in registry}
-    ordered.update((k, v) for k, v in registry.items() if k not in ordered)
+    ordered = {k: GATES[k].plan for k in _gate_order() if k in GATES}
+    ordered.update((k, g.plan) for k, g in GATES.items() if k not in ordered)
     return ordered
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        "span_dedup_docs": SPAN_DEDUP_SQL,
-        "bloom_decontam_docs": BLOOM_DECONTAM_SQL,
-        "bm25_search_docs": BM25_SQL,
-        "rag_hash_retrieval_docs": RAG_HASH_RETRIEVAL_SQL,
-        "knn_graph_docs": KNN_GRAPH_SQL,
-        "pagerank_docs": PAGERANK_SQL,
-        "rrf_fusion_docs": RRF_FUSION_SQL,
-        "knn_components_docs": KNN_COMPONENTS_SQL,
-        "knn_graph_lsh_docs": KNN_GRAPH_LSH_SQL,
-        "events_anomaly_daily": EVENTS_ANOMALY_SQL,
-        "stream_anomaly_counts": STREAM_ANOMALY_SQL,
-        "graph_walks_docs": GRAPH_WALKS_SQL,
-        "knn_triangles_docs": KNN_TRIANGLES_SQL,
-        "data_quality_audit": DATA_QUALITY_SQL,
-        "scd2_customers": SCD2_SQL,
-        "exists_window_orders": EXISTS_WINDOW_SQL,
-        "merge_upsert_orders": MERGE_UPSERT_SQL,
-        "drift_multibatch_pipeline": DRIFT_MULTIBATCH_SQL,
-        "k_anonymity_customers": K_ANONYMITY_SQL,
-        "incremental_agg_orders": INCREMENTAL_AGG_SQL,
-        "reservoir_sample_docs": RESERVOIR_SQL,
-        "classifier_score_docs": CLASSIFIER_SQL,
-        "stratified_exact_docs": STRATIFIED_EXACT_SQL,
-        "semantic_dedup_vecs": SEMANTIC_DEDUP_SQL,
-        "lm_perplexity_docs": LM_PERPLEXITY_SQL,
-        "text_entropy_docs": TEXT_ENTROPY_SQL,
-        "text_diversity_docs": TEXT_DIVERSITY_SQL,
-        "text_zipf_docs": TEXT_ZIPF_SQL,
-        "text_pmi_docs": TEXT_PMI_SQL,
-        "source_overlap_docs": SOURCE_OVERLAP_SQL,
-        "chunk_docs_rag": CHUNK_RAG_SQL,
-        "agg_countmin_tokens": COUNTMIN_SQL,
-        "dsir_resample_docs": DSIR_SQL,
-        "shard_manifest_docs": SHARD_MANIFEST_SQL,
-        "gopher_filter_docs": GOPHER_FILTER_SQL,
-        "hard_negatives_vecs": HARD_NEG_SQL,
-        "ccnet_buckets_docs": CCNET_BUCKETS_SQL,
-        "quality_percentile_docs_sf01": QUALITY_PCT_SF01_SQL,
-        "kn_bigram_model_docs_sf01": KN_BIGRAM_SF01_SQL,
-        "quality_percentile_docs": QUALITY_PCT_SQL,
-        "kn_bigram_model_docs": KN_BIGRAM_SQL,
-        "doremi_weights_docs": DOREMI_SQL,
-        "length_packing_docs": LENGTH_PACKING_SQL,
-        "triplet_mining_vecs": TRIPLET_SQL,
-        "cdc_chunks_docs": CDC_CHUNKS_SQL,
-        "purge_audit_docs": PURGE_AUDIT_SQL,
-        "stream_incremental_dedup_docs": DEDUP_INCREMENTAL_SQL,
-        "stream_incremental_dedup_docs_sf01": DEDUP_INCREMENTAL_SF01_SQL,
-        "span_clean_docs": SPAN_CLEAN_SQL,
-        "events_hopping_window": HOPPING_SQL,
-        "drift_tokens_docs": DRIFT_SQL,
-        "text_novelty_docs": NOVELTY_SQL,
-        "decontam_fuzzy_docs": DECONTAM_FUZZY_SQL,
-        "dataset_card_docs": DATASET_CARD_SQL,
-        "dedup_best_quality_docs": DEDUP_BEST_SQL,
-        "hll_incremental_orders": HLL_INCREMENTAL_SQL,
-        "rp_project_vecs": RP_PROJECT_SQL,
-        "tfidf_keywords_docs": TFIDF_SQL,
-        "sim_topk_rp": ANN_RECALL_SQL,
-        "sim_topk_sq": ANN_RECALL_SQL,
-        "sim_topk_pq": ANN_RECALL_SQL,
-        "matryoshka_recall_vecs": MATRYOSHKA_SQL,
-        "embed_centroid_eval": EMBED_CENTROID_EVAL_SQL,
-        "prf_expand_docs": PRF_EXPAND_SQL,
-        "mmr_rerank_docs": MMR_RERANK_SQL,
-        "q1_pricing_summary": Q1_SQL,
-        "q3_shipping_priority": Q3_SQL,
-        "q5_region_revenue": Q5_SQL,
-        "q6_forecast_revenue": Q6_SQL,
-        "q4_late_orders": Q4_SQL,
-        "q10_returned_revenue": Q10_SQL,
-        "q14_promo_share": Q14_SQL,
-        "q18_large_orders": Q18_SQL,
-        "q7_volume_shipping": Q7_SQL,
-        "q8_market_share": Q8_SQL,
-        "q9_product_profit": Q9_SQL,
-        "q12_ship_delay": Q12_SQL,
-        "q13_order_distribution": Q13_SQL,
-        "q17_small_quantity": Q17_SQL,
-        "q19_disjunctive": Q19_SQL,
-        "q21_waiting_suppliers": Q21_SQL,
-        "q22_global_sales": Q22_SQL,
-        "window_lag_lead": WINDOW_LAG_SQL,
-        "pivot_status_by_priority": PIVOT_SQL,
-        "hof_array_embeddings": HOF_ARRAY_SQL,
-        "q2_min_unit_price": Q2_SQL,
-        "q11_important_values": Q11_SQL,
-        "q15_top_supplier": Q15_SQL,
-        "q16_supplier_cnt": Q16_SQL,
-        "q20_chained_semi": Q20_SQL,
-        "sample_hash_orders": SAMPLE_HASH_SQL,
-        "stratified_sample_orders": STRATIFIED_SQL,
-        "histogram_totalprice": HISTOGRAM_SQL,
-        "string_agg_regions": STRING_AGG_SQL,
-        "regexp_funcs_parts": REGEXP_SQL,
-        "window_ntile_stats": WINDOW_NTILE_SQL,
-        "window_range_frame": WINDOW_RANGE_SQL,
-        "posexplode_part_words": POSEXPLODE_SQL,
-        "map_pivot_priorities": MAP_PIVOT_SQL,
-        "weekly_gapfill_orders": WEEKLY_GAPFILL_SQL,
-        "try_cast_events": TRY_CAST_SQL,
-        "union_by_name_customers": UNION_BY_NAME_SQL,
-        "hof_exists_forall_docs": HOF_PREDICATE_SQL,
-        "fuzzy_levenshtein_parts": FUZZY_LEV_SQL,
-        "paged_orders": PAGED_SQL,
-        "keyset_paged_orders": KEYSET_PAGED_SQL,
-        "agg_mode_bits": MODE_BITS_SQL,
-        "join_anti_customers": JOIN_ANTI_SQL,
-        "join_semi_suppliers": JOIN_SEMI_SQL,
-        "join_outer_order_counts": JOIN_OUTER_SQL,
-        "agg_distinct_per_flag": AGG_DISTINCT_SQL,
-        "rollup_orders": ROLLUP_SQL,
-        "cube_lineitem": CUBE_SQL,
-        "conditional_agg_priorities": COND_AGG_SQL,
-        "window_rank_customers": WINDOW_RANK_SQL,
-        "window_running_spend": WINDOW_RUNNING_SQL,
-        "topk_orders": TOPK_SQL,
-        "setops_customers": SETOPS_SQL,
-        "unpivot_lineitem_measures": UNPIVOT_SQL,
-        "setops_intersect_except": INTERSECT_SQL,
-        "join_null_safe_segments": NULL_SAFE_SQL,
-        "agg_minby_maxby": MINBY_SQL,
-        "string_funcs_parts": STRING_SQL,
-        "date_funcs_orders": DATE_SQL,
-        "json_extract_events": JSON_SQL,
-        "events_tumbling_window": TUMBLING_SQL,
-        "stream_windowed_counts": STREAM_WC_SQL,
-        "stream_dedup_counts": STREAM_DD_SQL,
-        "stream_sessionize_counts": STREAM_SESS_SQL,
-        "stream_interval_join_counts": STREAM_IJ_SQL,
-        "stream_enrich_counts": STREAM_EN_SQL,
-        "token_budget_mix_docs": TOKEN_BUDGET_SQL,
-        "events_sessionize": SESSIONIZE_SQL,
-        "events_asof_join": ASOF_SQL,
-        "events_funnel_users": EVENTS_FUNNEL_SQL,
-        "events_cohort_retention": EVENTS_COHORT_SQL,
-        "events_range_join": RANGE_JOIN_SQL,
-        "events_rollup_day": ROLLUP_DAY_SQL,
-        "agg_approx_distinct": AGG_APPROX_DISTINCT_SQL,
-        "approx_quantile_orders": APPROX_QUANTILE_SQL,
-        "flatten_restructure": FLATTEN_SQL,
-        "partition_specs_orders": PARTITION_SPECS_SQL,
-        "math_funcs_lineitem": MATH_SQL,
-        "cond_exprs_customers": COND_SQL,
-        "percentile_orders": PERCENTILE_SQL,
-        "stats_agg_lineitem": STATS_SQL,
-        "scalar_subquery_small_orders": SCALAR_SUBQ_SQL,
-        "array_agg_nations": ARRAY_AGG_SQL,
-        "sql_grouping_sets": GROUPING_SETS_SQL,
-        "multimodal_features_docs": MULTIMODAL_SQL,
-        "multimodal_decode_real": MULTIMODAL_REAL_SQL,
-        "dedup_exact_docs": DEDUP_EXACT_SQL,
-        "dedup_paragraph_docs": DEDUP_PARAGRAPH_SQL,
-        "weighted_sample_docs": WEIGHTED_SAMPLE_SQL,
-        "leakage_split_docs": LEAKAGE_SPLIT_SQL,
-        "dedup_keep_first_docs": DEDUP_KEEP_FIRST_SQL,
-        "dedup_ngram_pairs": DEDUP_NGRAM_SQL,
-        "dedup_minhash_pairs_sf01": DEDUP_MINHASH_SF01_SQL,
-        "dedup_cluster_docs_sf01": DEDUP_CLUSTER_SF01_SQL,
-        "dedup_simhash_pairs_sf01": PAIR_RECALL_SF01_SQL,
-        "dedup_winnow_pairs_sf01": PAIR_RECALL_SF01_SQL,
-        "dedup_cluster_docs": DEDUP_CLUSTER_SQL,
-        "curation_pipeline_docs": CURATION_SQL,
-        "skew_salted_token_counts": SKEW_TOKENS_SQL,
-        "snapshot_diff_orders": SNAPSHOT_DIFF_SQL,
-        "dq_checks_orders": DQ_CHECKS_SQL,
-        "text_quality_docs": TEXT_QUALITY_SQL,
-        "text_langid_docs": TEXT_LANGID_SQL,
-        "text_fingerprint_docs": TEXT_FINGERPRINT_SQL,
-        "text_bpe_token_stats": BPE_TOKEN_SQL,
-        "bpe_vocab_docs": BPE_VOCAB_SQL,
-        "bpe_symbols_docs": BPE_SYMBOLS_SQL,
-        "bpe_doc_tokens_docs": BPE_DOC_TOKENS_SQL,
-        "curriculum_stages_docs": BPE_CURRICULUM_SQL,
-        "text_token_freq": TOKEN_FREQ_SQL,
-        "sim_topk_bruteforce": SIM_TOPK_SQL,
-        "sim_neardup_exact": SIM_NEARDUP_SQL,
-        "embed_label_stats": EMBED_STATS_SQL,
-        "embed_centroids": EMBED_CENTROIDS_SQL,
-        "embed_silhouette_vecs": EMBED_SILHOUETTE_SQL,
-        "sim_topk_lsh": ANN_RECALL_SQL,
-        "sim_topk_ivf": ANN_RECALL_SQL,
-        "embed_label_spectrum": EMBED_SPECTRUM_SQL,
-        # sketch-dedup recall gates (raw pair lists are hash-
-        # algorithm-specific; quantitative bounds also in pytest):
-        "dedup_simhash_pairs": PAIR_RECALL_SQL,
-        "dedup_winnow_pairs": PAIR_RECALL_SQL,
-        "decontam_docs": DECONTAM_SQL,
-        "text_pii_redact": PII_SQL,
-        "seq_packing_docs": SEQ_PACKING_SQL,
-        "pack_boundaries_docs": PACK_BOUNDARIES_SQL,
-        "mix_sample_docs": MIX_SAMPLE_SQL,
-        "boilerplate_ngrams_docs": BOILERPLATE_SQL,
-        "events_session_window": SESSION_WINDOW_SQL,
-        "text_repetition_docs": REPETITION_SQL,
-        "dedup_incremental_docs": DEDUP_INCREMENTAL_SQL,
-        "dedup_incremental_docs_sf01": DEDUP_INCREMENTAL_SF01_SQL,
-        "embed_cluster_vecs": EMBED_CLUSTER_SQL,
-    }
+    """Every gate's DuckDB oracle SQL, keyed by gate name."""
+    return {k: g.oracle for k, g in GATES.items()}
+
+
+class Gate(NamedTuple):
+    """One gate: the plan function, the DuckDB SQL that checks it, and
+    whether ``bench.py`` times it."""
+
+    plan: Callable[[SparkSession, str], DataFrame]
+    oracle: str
+    bench: bool = True
+
+
+# The gate table: one row per gate, keyed by the plan function's name.
+# It sits at the end of the module because most oracle constants are
+# defined after their gate function. Bench rows come first, in the
+# order bench.py times them; the rows bench.py skips close the table,
+# grouped by the reason they are skipped.
+GATES: dict[str, Gate] = {
+    g.plan.__name__: g
+    for g in (
+        Gate(q1_pricing_summary, Q1_SQL),
+        Gate(q3_shipping_priority, Q3_SQL),
+        Gate(q5_region_revenue, Q5_SQL),
+        Gate(q6_forecast_revenue, Q6_SQL),
+        Gate(q4_late_orders, Q4_SQL),
+        Gate(exists_window_orders, EXISTS_WINDOW_SQL),
+        Gate(q10_returned_revenue, Q10_SQL),
+        Gate(q14_promo_share, Q14_SQL),
+        Gate(q18_large_orders, Q18_SQL),
+        Gate(q7_volume_shipping, Q7_SQL),
+        Gate(q8_market_share, Q8_SQL),
+        Gate(q9_product_profit, Q9_SQL),
+        Gate(q12_ship_delay, Q12_SQL),
+        Gate(q13_order_distribution, Q13_SQL),
+        Gate(q17_small_quantity, Q17_SQL),
+        Gate(q19_disjunctive, Q19_SQL),
+        Gate(q21_waiting_suppliers, Q21_SQL),
+        Gate(q22_global_sales, Q22_SQL),
+        Gate(window_lag_lead, WINDOW_LAG_SQL),
+        Gate(pivot_status_by_priority, PIVOT_SQL),
+        Gate(hof_array_embeddings, HOF_ARRAY_SQL),
+        Gate(q2_min_unit_price, Q2_SQL),
+        Gate(q11_important_values, Q11_SQL),
+        Gate(q15_top_supplier, Q15_SQL),
+        Gate(q16_supplier_cnt, Q16_SQL),
+        Gate(q20_chained_semi, Q20_SQL),
+        Gate(sample_hash_orders, SAMPLE_HASH_SQL),
+        Gate(stratified_sample_orders, STRATIFIED_SQL),
+        Gate(histogram_totalprice, HISTOGRAM_SQL),
+        Gate(string_agg_regions, STRING_AGG_SQL),
+        Gate(regexp_funcs_parts, REGEXP_SQL),
+        Gate(window_ntile_stats, WINDOW_NTILE_SQL),
+        Gate(window_range_frame, WINDOW_RANGE_SQL),
+        Gate(posexplode_part_words, POSEXPLODE_SQL),
+        Gate(map_pivot_priorities, MAP_PIVOT_SQL),
+        Gate(weekly_gapfill_orders, WEEKLY_GAPFILL_SQL),
+        Gate(try_cast_events, TRY_CAST_SQL),
+        Gate(union_by_name_customers, UNION_BY_NAME_SQL),
+        Gate(hof_exists_forall_docs, HOF_PREDICATE_SQL),
+        Gate(fuzzy_levenshtein_parts, FUZZY_LEV_SQL),
+        Gate(paged_orders, PAGED_SQL),
+        Gate(keyset_paged_orders, KEYSET_PAGED_SQL),
+        Gate(agg_mode_bits, MODE_BITS_SQL),
+        Gate(join_outer_order_counts, JOIN_OUTER_SQL),
+        Gate(agg_distinct_per_flag, AGG_DISTINCT_SQL),
+        Gate(rollup_orders, ROLLUP_SQL),
+        Gate(window_rank_customers, WINDOW_RANK_SQL),
+        Gate(window_running_spend, WINDOW_RUNNING_SQL),
+        Gate(topk_orders, TOPK_SQL),
+        Gate(json_extract_events, JSON_SQL),
+        Gate(events_tumbling_window, TUMBLING_SQL),
+        Gate(events_hopping_window, HOPPING_SQL),
+        Gate(stream_windowed_counts, STREAM_WC_SQL),
+        Gate(stream_dedup_counts, STREAM_DD_SQL),
+        Gate(token_budget_mix_docs, TOKEN_BUDGET_SQL),
+        Gate(events_sessionize, SESSIONIZE_SQL),
+        Gate(events_asof_join, ASOF_SQL),
+        Gate(events_range_join, RANGE_JOIN_SQL),
+        Gate(flatten_restructure, FLATTEN_SQL),
+        Gate(math_funcs_lineitem, MATH_SQL),
+        Gate(percentile_orders, PERCENTILE_SQL),
+        Gate(stats_agg_lineitem, STATS_SQL),
+        Gate(scalar_subquery_small_orders, SCALAR_SUBQ_SQL),
+        Gate(sql_grouping_sets, GROUPING_SETS_SQL),
+        Gate(multimodal_features_docs, MULTIMODAL_SQL),
+        Gate(dedup_exact_docs, DEDUP_EXACT_SQL),
+        Gate(dedup_cluster_docs, DEDUP_CLUSTER_SQL),
+        Gate(curation_pipeline_docs, CURATION_SQL),
+        Gate(skew_salted_token_counts, SKEW_TOKENS_SQL),
+        Gate(approx_quantile_orders, APPROX_QUANTILE_SQL),
+        Gate(snapshot_diff_orders, SNAPSHOT_DIFF_SQL),
+        Gate(dq_checks_orders, DQ_CHECKS_SQL),
+        Gate(dedup_simhash_pairs, PAIR_RECALL_SQL),
+        Gate(dedup_winnow_pairs, PAIR_RECALL_SQL),
+        Gate(decontam_docs, DECONTAM_SQL),
+        Gate(text_pii_redact, PII_SQL),
+        Gate(seq_packing_docs, SEQ_PACKING_SQL),
+        Gate(mix_sample_docs, MIX_SAMPLE_SQL),
+        Gate(boilerplate_ngrams_docs, BOILERPLATE_SQL),
+        Gate(events_session_window, SESSION_WINDOW_SQL),
+        Gate(text_repetition_docs, REPETITION_SQL),
+        Gate(text_quality_docs, TEXT_QUALITY_SQL),
+        Gate(text_langid_docs, TEXT_LANGID_SQL),
+        Gate(text_fingerprint_docs, TEXT_FINGERPRINT_SQL),
+        Gate(sim_topk_bruteforce, SIM_TOPK_SQL),
+        Gate(sim_topk_lsh, ANN_RECALL_SQL),
+        Gate(sim_topk_ivf, ANN_RECALL_SQL),
+        Gate(embed_label_stats, EMBED_STATS_SQL),
+        Gate(embed_centroids, EMBED_CENTROIDS_SQL),
+        Gate(embed_label_spectrum, EMBED_SPECTRUM_SQL),
+        Gate(agg_approx_distinct, AGG_APPROX_DISTINCT_SQL),
+        Gate(agg_minby_maxby, MINBY_SQL),
+        Gate(array_agg_nations, ARRAY_AGG_SQL),
+        Gate(cond_exprs_customers, COND_SQL),
+        Gate(conditional_agg_priorities, COND_AGG_SQL),
+        Gate(cube_lineitem, CUBE_SQL),
+        Gate(date_funcs_orders, DATE_SQL),
+        Gate(dedup_keep_first_docs, DEDUP_KEEP_FIRST_SQL),
+        Gate(events_rollup_day, ROLLUP_DAY_SQL),
+        Gate(join_anti_customers, JOIN_ANTI_SQL),
+        Gate(join_null_safe_segments, NULL_SAFE_SQL),
+        Gate(join_semi_suppliers, JOIN_SEMI_SQL),
+        Gate(partition_specs_orders, PARTITION_SPECS_SQL),
+        Gate(setops_customers, SETOPS_SQL),
+        Gate(setops_intersect_except, INTERSECT_SQL),
+        Gate(string_funcs_parts, STRING_SQL),
+        Gate(text_bpe_token_stats, BPE_TOKEN_SQL),
+        Gate(text_token_freq, TOKEN_FREQ_SQL),
+        Gate(unpivot_lineitem_measures, UNPIVOT_SQL),
+        Gate(span_dedup_docs, SPAN_DEDUP_SQL),
+        Gate(bloom_decontam_docs, BLOOM_DECONTAM_SQL),
+        Gate(bm25_search_docs, BM25_SQL),
+        Gate(reservoir_sample_docs, RESERVOIR_SQL),
+        Gate(classifier_score_docs, CLASSIFIER_SQL),
+        Gate(stratified_exact_docs, STRATIFIED_EXACT_SQL),
+        Gate(lm_perplexity_docs, LM_PERPLEXITY_SQL),
+        Gate(text_entropy_docs, TEXT_ENTROPY_SQL),
+        Gate(agg_countmin_tokens, COUNTMIN_SQL),
+        Gate(dsir_resample_docs, DSIR_SQL),
+        Gate(shard_manifest_docs, SHARD_MANIFEST_SQL),
+        Gate(gopher_filter_docs, GOPHER_FILTER_SQL),
+        Gate(hard_negatives_vecs, HARD_NEG_SQL),
+        Gate(ccnet_buckets_docs, CCNET_BUCKETS_SQL),
+        Gate(drift_tokens_docs, DRIFT_SQL),
+        Gate(text_novelty_docs, NOVELTY_SQL),
+        Gate(decontam_fuzzy_docs, DECONTAM_FUZZY_SQL),
+        Gate(dataset_card_docs, DATASET_CARD_SQL),
+        Gate(dedup_best_quality_docs, DEDUP_BEST_SQL),
+        Gate(hll_incremental_orders, HLL_INCREMENTAL_SQL),
+        Gate(rp_project_vecs, RP_PROJECT_SQL),
+        Gate(tfidf_keywords_docs, TFIDF_SQL),
+        Gate(sim_topk_rp, ANN_RECALL_SQL),
+        Gate(multimodal_decode_real, MULTIMODAL_REAL_SQL),
+        Gate(dedup_paragraph_docs, DEDUP_PARAGRAPH_SQL),
+        Gate(weighted_sample_docs, WEIGHTED_SAMPLE_SQL),
+        Gate(leakage_split_docs, LEAKAGE_SPLIT_SQL),
+        Gate(text_diversity_docs, TEXT_DIVERSITY_SQL),
+        Gate(text_zipf_docs, TEXT_ZIPF_SQL),
+        Gate(chunk_docs_rag, CHUNK_RAG_SQL),
+        Gate(sim_topk_sq, ANN_RECALL_SQL),
+        Gate(stream_sessionize_counts, STREAM_SESS_SQL),
+        Gate(stream_interval_join_counts, STREAM_IJ_SQL),
+        Gate(stream_enrich_counts, STREAM_EN_SQL),
+        Gate(pack_boundaries_docs, PACK_BOUNDARIES_SQL),
+        Gate(text_pmi_docs, TEXT_PMI_SQL),
+        Gate(source_overlap_docs, SOURCE_OVERLAP_SQL),
+        Gate(quality_percentile_docs, QUALITY_PCT_SQL),
+        Gate(kn_bigram_model_docs, KN_BIGRAM_SQL),
+        Gate(doremi_weights_docs, DOREMI_SQL),
+        Gate(length_packing_docs, LENGTH_PACKING_SQL),
+        Gate(triplet_mining_vecs, TRIPLET_SQL),
+        Gate(cdc_chunks_docs, CDC_CHUNKS_SQL),
+        Gate(purge_audit_docs, PURGE_AUDIT_SQL),
+        Gate(span_clean_docs, SPAN_CLEAN_SQL),
+        # k+1 sequential merge jobs by design: at toy SF its wall time is
+        # per-iteration fixed cost, not data volume
+        Gate(bpe_vocab_docs, BPE_VOCAB_SQL),
+        Gate(embed_silhouette_vecs, EMBED_SILHOUETTE_SQL),
+        Gate(events_funnel_users, EVENTS_FUNNEL_SQL),
+        Gate(events_cohort_retention, EVENTS_COHORT_SQL),
+        Gate(rag_hash_retrieval_docs, RAG_HASH_RETRIEVAL_SQL),
+        # O(n²) by contract over the bounded doc_id%5 sample (1M pairs at
+        # sf0.1, expression-only); knn_graph_lsh_docs is the full-corpus path
+        Gate(knn_graph_docs, KNN_GRAPH_SQL),
+        Gate(pagerank_docs, PAGERANK_SQL),
+        Gate(knn_components_docs, KNN_COMPONENTS_SQL),
+        Gate(rrf_fusion_docs, RRF_FUSION_SQL),
+        Gate(events_anomaly_daily, EVENTS_ANOMALY_SQL),
+        Gate(stream_anomaly_counts, STREAM_ANOMALY_SQL),
+        Gate(graph_walks_docs, GRAPH_WALKS_SQL),
+        Gate(knn_triangles_docs, KNN_TRIANGLES_SQL),
+        Gate(data_quality_audit, DATA_QUALITY_SQL),
+        Gate(scd2_customers, SCD2_SQL),
+        Gate(k_anonymity_customers, K_ANONYMITY_SQL),
+        Gate(incremental_agg_orders, INCREMENTAL_AGG_SQL),
+        Gate(sim_topk_pq, ANN_RECALL_SQL),
+        Gate(matryoshka_recall_vecs, MATRYOSHKA_SQL),
+        Gate(prf_expand_docs, PRF_EXPAND_SQL),
+        Gate(mmr_rerank_docs, MMR_RERANK_SQL),
+        Gate(knn_graph_lsh_docs, KNN_GRAPH_LSH_SQL),
+        Gate(embed_centroid_eval, EMBED_CENTROID_EVAL_SQL),
+        # O(n²) all-pairs oracle paths; their scalable LSH/IVF counterparts
+        # are benched instead
+        Gate(dedup_ngram_pairs, DEDUP_NGRAM_SQL, bench=False),
+        Gate(sim_neardup_exact, SIM_NEARDUP_SQL, bench=False),
+        Gate(embed_cluster_vecs, EMBED_CLUSTER_SQL, bench=False),
+        # Verifies against the exact all-pairs cosine oracle in-plan
+        Gate(semantic_dedup_vecs, SEMANTIC_DEDUP_SQL, bench=False),
+        # *_sf01 twins: each is a benched plan pinned to sf0.1 (the MinHash
+        # pair frame is benched inside dedup_cluster_docs)
+        Gate(quality_percentile_docs_sf01, QUALITY_PCT_SF01_SQL, bench=False),
+        Gate(kn_bigram_model_docs_sf01, KN_BIGRAM_SF01_SQL, bench=False),
+        Gate(dedup_minhash_pairs_sf01, DEDUP_MINHASH_SF01_SQL, bench=False),
+        Gate(dedup_cluster_docs_sf01, DEDUP_CLUSTER_SF01_SQL, bench=False),
+        Gate(dedup_simhash_pairs_sf01, PAIR_RECALL_SF01_SQL, bench=False),
+        Gate(dedup_winnow_pairs_sf01, PAIR_RECALL_SF01_SQL, bench=False),
+        # Re-run the training loop that bpe_vocab_docs times, plus one
+        # vocab-bounded aggregate or broadcast join
+        Gate(bpe_symbols_docs, BPE_SYMBOLS_SQL, bench=False),
+        Gate(bpe_doc_tokens_docs, BPE_DOC_TOKENS_SQL, bench=False),
+        Gate(curriculum_stages_docs, BPE_CURRICULUM_SQL, bench=False),
+        # Replay the corpus into a fresh band store (and corpus sink) per call
+        # by design; the per-batch path is benched via the shared-signature
+        # gates. The _sf01 twins are also pinned to sf0.1
+        Gate(dedup_incremental_docs, DEDUP_INCREMENTAL_SQL, bench=False),
+        Gate(stream_incremental_dedup_docs, DEDUP_INCREMENTAL_SQL, bench=False),
+        Gate(dedup_incremental_docs_sf01, DEDUP_INCREMENTAL_SF01_SQL, bench=False),
+        Gate(stream_incremental_dedup_docs_sf01, DEDUP_INCREMENTAL_SF01_SQL, bench=False),
+        # Bootstrap a fresh sink (the drift gate also a fresh catalog db) per
+        # call by design; the partitioned writer they exercise is pinned by
+        # the layout tests
+        Gate(merge_upsert_orders, MERGE_UPSERT_SQL, bench=False),
+        Gate(drift_multibatch_pipeline, DRIFT_MULTIBATCH_SQL, bench=False),
+    )
+}

@@ -86,3 +86,18 @@ def test_queries_order_is_gate_order_json():
         f"gates missing from gate_order.json (run "
         f"`python tools/gate_deps.py --write`): {sorted(missing)}"
     )
+
+
+def test_gate_deps_reads_the_gate_table():
+    """tools/gate_deps.py maps gates to code by parsing the GATES table;
+    an empty or partial parse would make `--write` emit a short order."""
+    sys.path.insert(0, os.path.join(os.path.dirname(entry.__file__), "tools"))
+    import gate_deps
+
+    with open(entry.__file__) as fh:
+        cur = gate_deps._EntryAnalysis(fh.read())
+    assert set(cur.oracle_const) == set(entry.queries())
+    oracles = entry.oracle_sql()
+    for gate, const in cur.oracle_const.items():
+        assert getattr(entry, const) == oracles[gate], gate
+        assert gate in cur.defs, gate

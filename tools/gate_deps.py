@@ -1,6 +1,7 @@
 """Mechanical driver-window ordering (round-7 verdict task #1).
 
-Maps every ``queries()`` gate to the code that backs it — the gate
+Maps every gate (one row of the ``GATES`` table in
+``__spark_entry__.py``) to the code that backs it — the gate
 function's own source (transitive closure over the top-level names it
 references in ``__spark_entry__.py``, INCLUDING its oracle-SQL
 constant) plus the package modules that closure imports (transitive
@@ -188,11 +189,26 @@ def transitive(graph: dict[str, set[str]], seeds: set[str]) -> set[str]:
 # --------------------------------------- entry-file closure per gate
 
 
-class _EntryAnalysis:
-    """Top-level defs, package-import aliases, and the queries()/
-    oracle_sql() name maps of one revision of __spark_entry__.py."""
+def gate_table(tree: ast.AST) -> dict[str, str]:
+    """gate name -> oracle-constant name, from the ``Gate(plan,
+    ORACLE_SQL, ...)`` rows of the ``GATES`` table in one parsed
+    __spark_entry__.py. A gate's name is its plan function's name."""
+    out: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and getattr(node.func, "id", "") == "Gate":
+            plan, oracle = node.args[:2]
+            out[plan.id] = oracle.id
+    return out
 
-    def __init__(self, source: str):
+
+class _EntryAnalysis:
+    """Top-level defs and package-import aliases of one revision of
+    __spark_entry__.py, plus the gate -> oracle-constant map. Round-
+    boundary revisions are read with the CURRENT map (``oracle_const``):
+    the older ones declared gates in other forms, and one map keeps
+    each gate's hash roots the same at every revision."""
+
+    def __init__(self, source: str, oracle_const: dict[str, str] | None = None):
         self.tree = ast.parse(source)
         self.source = source
         self.defs: dict[str, ast.AST] = {}
@@ -222,24 +238,9 @@ class _EntryAnalysis:
                         target = _resolve_module(mod_parts)
                     if target:
                         self.alias_files[name] = target
-        self.query_fn = self._dict_map("queries")
-        self.oracle_const = self._dict_map("oracle_sql")
-
-    def _dict_map(self, fn_name: str) -> dict[str, str]:
-        """gate name -> top-level value name, from the dict literal
-        returned by ``fn_name``."""
-        fn = self.defs.get(fn_name)
-        out: dict[str, str] = {}
-        if fn is None:
-            return out
-        for node in ast.walk(fn):
-            if isinstance(node, ast.Dict):
-                for k, v in zip(node.keys, node.values):
-                    if isinstance(k, ast.Constant) and isinstance(
-                        v, ast.Name
-                    ):
-                        out[k.value] = v.id
-        return out
+        self.oracle_const = (
+            gate_table(self.tree) if oracle_const is None else oracle_const
+        )
 
     def closure(self, names: list[str]) -> tuple[set[str], set[str]]:
         """-> (top-level def names, package files) reachable."""
@@ -261,15 +262,9 @@ class _EntryAnalysis:
         return seen, files
 
     def gate_hash(self, gate: str) -> str | None:
-        roots = []
-        fn = self.query_fn.get(gate)
-        if fn is None:
+        if gate not in self.defs:
             return None
-        roots.append(fn)
-        const = self.oracle_const.get(gate)
-        if const:
-            roots.append(const)
-        names, _files = self.closure(roots)
+        names, _files = self.closure([gate, self.oracle_const[gate]])
         segs = sorted(
             ast.get_source_segment(self.source, self.defs[n]) or n
             for n in names
@@ -277,11 +272,7 @@ class _EntryAnalysis:
         return hashlib.sha256("\n".join(segs).encode()).hexdigest()[:16]
 
     def gate_files(self, gate: str, graph: dict[str, set[str]]) -> set[str]:
-        roots = [self.query_fn[gate]]
-        const = self.oracle_const.get(gate)
-        if const:
-            roots.append(const)
-        _names, files = self.closure(roots)
+        _names, files = self.closure([gate, self.oracle_const[gate]])
         return transitive(graph, files)
 
 
@@ -311,13 +302,13 @@ def analyze() -> list[dict]:
         changed_since[rnd] = changed_files_since(sha)
         try:
             old_analyses[rnd] = _EntryAnalysis(
-                _git("show", f"{sha}:{ENTRY}")
+                _git("show", f"{sha}:{ENTRY}"), cur.oracle_const
             )
         except Exception:
             old_analyses[rnd] = None
 
     rows = []
-    for gate in cur.query_fn:
+    for gate in cur.oracle_const:
         rnd = checked.get(gate)
         files = sorted(cur.gate_files(gate, graph))
         if rnd is None:

@@ -76,6 +76,13 @@ def stream_ingest(
     return writer.start()
 
 
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
 def run_available_now(query: StreamingQuery, timeout_s: int = 300) -> None:
     """Block until an ``AvailableNow`` ingest drains and stops.
 
@@ -116,9 +123,7 @@ def run_to_memory(
     partitions costs ~128 store commits per micro-batch; measured
     6.9 s → 2.5 s on the interval-join gate by right-sizing).
 
-    Two fixed-floor cuts (r14 optimization round, guide §2/§5 —
-    measured breakdown: addBatch dominates, then the trailing
-    no-data batch and the WAL/offsets/state commit fsyncs):
+    Fixed-floor cuts, each FOR THE DRAIN ONLY (restored after):
 
     * **No trailing no-data micro-batch.** Under AvailableNow the
       watermark-advancing empty batch exists to fire timeouts /
@@ -129,16 +134,36 @@ def run_to_memory(
       everything per batch (complete mode) — the empty batch
       re-commits every state store and rewrites the sink for zero
       new rows (measured 0.45-1.2 s on the dedup/interval gates).
-      Disabled FOR THE DRAIN ONLY, restored after.
-    * **Checkpoint on RAM-backed storage.** The offsets/commit WAL
-      and the HDFS-backed state stores fsync per batch into the
-      checkpoint dir; the default temp dir lives on the root disk.
-      A finite memory-sink verification drain needs no durability,
-      so the checkpoint goes under ``/dev/shm`` when present
-      (override: ``$SPARK_GRAFT_STREAM_CKPT_DIR``; a production
-      deployment points this at durable shared storage, where the
-      fsync cost is the price of exactly-once) and is deleted after
-      the drain — no state survives the call."""
+    * **No process fork per checkpoint file.** Without ``libhadoop``
+      Hadoop's local filesystem forks a ``readlink`` for every
+      ``FileContext`` path-status call; the default
+      ``FileContextBasedCheckpointFileManager`` pays four of them per
+      temp-file rename, so every offsets/commit WAL entry and every
+      state-store delta cost several 2.5-4 ms forks of the driver
+      JVM (about 170 ``readlink`` forks per drain; the per-store
+      commit cost was the same at 5 and at 100,000 state rows, and
+      the same on tmpfs as on disk). The drain uses
+      ``FileSystemBasedCheckpointFileManager``, which renames with
+      ``File.renameTo`` and forks none. It gives up FileContext's
+      atomic no-overwrite rename, which only guards concurrent
+      writers of one checkpoint; this checkpoint is a uuid-named
+      directory the call creates and deletes, so it has one writer.
+      Spark's checkpoint checksums and Hadoop's ``.crc`` files stay
+      on. The production constructors (``stream_ingest``,
+      ``stream_ingest_with_catalog``, ``stream_incremental_dedup``)
+      keep the default manager: their checkpoints are durable and
+      may be shared.
+
+    The checkpoint goes under ``$SPARK_GRAFT_STREAM_CKPT_DIR``
+    (a deployment path; default ``tempfile.gettempdir()``) and is
+    deleted after the drain — no state survives the call. It is not
+    put on tmpfs (``/dev/shm``) by default: Hadoop's local filesystem
+    does not fsync, the commit cost was the forks above, and without
+    them a drain reads the same on tmpfs and on disk.
+
+    The memory sink's temp view is dropped before returning: the
+    returned DataFrame still holds the sink's rows, but the session
+    catalog no longer pins them for the session's life."""
     import os
     import shutil
     import tempfile
@@ -149,9 +174,9 @@ def run_to_memory(
     prev_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
+    prev_manager = spark.conf.get(_CKPT_MANAGER_CONF, None)
     ckpt_base = os.environ.get(
-        "SPARK_GRAFT_STREAM_CKPT_DIR",
-        "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir(),
+        "SPARK_GRAFT_STREAM_CKPT_DIR", tempfile.gettempdir()
     )
     ckpt = os.path.join(ckpt_base, f"sg_stream_ckpt_{uuid.uuid4().hex}")
     if shuffle_partitions is not None:
@@ -161,6 +186,7 @@ def run_to_memory(
     spark.conf.set(
         "spark.sql.streaming.noDataMicroBatches.enabled", "false"
     )
+    spark.conf.set(_CKPT_MANAGER_CONF, _FS_CKPT_MANAGER)
     try:
         q = (
             df.writeStream.format("memory")
@@ -177,8 +203,14 @@ def run_to_memory(
         spark.conf.set(
             "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
         )
+        if prev_manager is None:
+            spark.conf.unset(_CKPT_MANAGER_CONF)
+        else:
+            spark.conf.set(_CKPT_MANAGER_CONF, prev_manager)
         shutil.rmtree(ckpt, ignore_errors=True)
-    return df.sparkSession.table(query_name)
+    result = spark.table(query_name)
+    spark.catalog.dropTempView(query_name)
+    return result
 
 
 def sessionize_stateful(

@@ -5,6 +5,7 @@ flatten → partitioned-parquet → archive semantics idiomatically)."""
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.streaming.ingest import (
@@ -158,16 +159,16 @@ def test_windowed_event_counts_streaming_matches_batch(spark, tmp_path):
     assert got == expected and len(got) == 2
 
 
-def test_run_to_memory_restores_confs_and_cleans_checkpoint(
-    spark, tmp_path
-):
-    """r14 drain levers: run_to_memory disables no-data micro-batches
-    and places the checkpoint on RAM-backed storage FOR THE DRAIN
-    ONLY — after it returns, both confs are restored and no
-    checkpoint dir survives (nothing is cached across invocations),
-    and the drained result still matches the batch twin."""
-    import glob
+CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _drain_window_counts(spark, tmp_path, query_name):
+    """One ``run_to_memory`` drain of a small windowed count; returns
+    the drained frame and the batch twin's rows."""
     from aws_etl_architecture_schedule_based_batch_optimized_emr_etl_using_lambda_with_cloud_watch_logs_spark.streaming.ingest import (
         run_to_memory,
     )
@@ -180,35 +181,45 @@ def test_run_to_memory_restores_confs_and_cleans_checkpoint(
     ]
     _write_json(os.path.join(src, "e1.json"), events)
     schema = "ts timestamp, event_type string, value double"
+    stream_df = spark.readStream.schema(schema).json(src)
+    drained = run_to_memory(
+        windowed_event_counts(stream_df), query_name, shuffle_partitions=4
+    )
+    batch_df = spark.read.schema(schema).json(src)
+    return drained, windowed_event_counts(batch_df).collect()
+
+
+def test_run_to_memory_restores_confs_and_cleans_checkpoint(
+    spark, tmp_path
+):
+    """run_to_memory disables no-data micro-batches and swaps in the
+    FileSystem-based checkpoint file manager FOR THE DRAIN ONLY: after
+    it returns, every conf is restored, no checkpoint dir survives,
+    the memory sink's temp view is dropped (the session does not pin
+    the sink's rows), and the returned frame still collects and
+    matches the batch twin."""
+    import glob
+    import tempfile
 
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
+    prev_manager = spark.conf.get(CKPT_MANAGER_CONF, None)
     ckpt_base = os.environ.get(
-        "SPARK_GRAFT_STREAM_CKPT_DIR",
-        "/dev/shm" if os.path.isdir("/dev/shm") else None,
+        "SPARK_GRAFT_STREAM_CKPT_DIR", tempfile.gettempdir()
     )
-    before = (
-        set(glob.glob(os.path.join(ckpt_base, "sg_stream_ckpt_*")))
-        if ckpt_base
-        else set()
+    before = set(glob.glob(os.path.join(ckpt_base, "sg_stream_ckpt_*")))
+    views_before = _temp_views(spark)
+
+    drained, batch_rows = _drain_window_counts(
+        spark, tmp_path, "rtm_lever_test"
     )
 
-    stream_df = spark.readStream.schema(schema).json(src)
-    got = {
-        (r["window_start"], r["event_type"], r["n_events"], r["sum_value"])
-        for r in run_to_memory(
-            windowed_event_counts(stream_df),
-            "rtm_lever_test",
-            shuffle_partitions=4,
-        ).collect()
-    }
-    batch_df = spark.read.schema(schema).json(src)
-    expected = {
-        (r["window_start"], r["event_type"], r["n_events"], r["sum_value"])
-        for r in windowed_event_counts(batch_df).collect()
-    }
+    assert _temp_views(spark) == views_before
+    key = ("window_start", "event_type", "n_events", "sum_value")
+    got = {tuple(r[k] for k in key) for r in drained.collect()}
+    expected = {tuple(r[k] for k in key) for r in batch_rows}
     assert got == expected and len(got) == 2
     # confs restored exactly
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev_parts
@@ -216,10 +227,68 @@ def test_run_to_memory_restores_confs_and_cleans_checkpoint(
         spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
         == prev_nodata
     )
+    assert spark.conf.get(CKPT_MANAGER_CONF, None) == prev_manager
     # no checkpoint state survives the drain
-    if ckpt_base:
-        after = set(glob.glob(os.path.join(ckpt_base, "sg_stream_ckpt_*")))
-        assert after == before
+    after = set(glob.glob(os.path.join(ckpt_base, "sg_stream_ckpt_*")))
+    assert after == before
+
+
+def test_run_to_memory_forks_no_readlink(spark, tmp_path):
+    """Without libhadoop, the default FileContext-based checkpoint file
+    manager forks a ``readlink`` per path-status call (four per
+    temp-file rename; 112 for this drain). The drain's checkpoint
+    must fork none: a JFR ``jdk.ProcessStart`` recording around one
+    drain counts the ``readlink`` spawns that name its checkpoint."""
+    jvm = spark.sparkContext._jvm
+    jfr = jvm.jdk.jfr
+    if not jfr.FlightRecorder.isAvailable() or not any(
+        t.getName() == "jdk.ProcessStart"
+        for t in jfr.FlightRecorder.getFlightRecorder().getEventTypes()
+    ):
+        pytest.skip("JFR event jdk.ProcessStart unavailable")
+
+    rec = jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        drained, _ = _drain_window_counts(spark, tmp_path, "rtm_fork_test")
+        # a fork the recording must see, so zero below is not vacuous
+        jvm.java.lang.Runtime.getRuntime().exec("true").waitFor()
+    finally:
+        rec.stop()
+    dump = jvm.java.io.File(str(tmp_path / "drain.jfr")).toPath()
+    rec.dump(dump)
+    rec.close()
+    commands = [
+        e.getString("command")
+        for e in jfr.consumer.RecordingFile.readAllEvents(dump)
+    ]
+    assert drained.count() == 2
+    assert "true" in commands
+    readlinks = [
+        c for c in commands if "readlink" in c and "sg_stream_ckpt_" in c
+    ]
+    assert readlinks == [], f"{len(readlinks)} readlink forks"
+
+
+def test_codegen_cache_holds_more_than_100_classes(spark):
+    """``spark.sql.codegen.cache.maxEntries`` is raised above a pass's
+    working set: 120 distinct generated classes, compiled once, are
+    all cache hits the second time round (at the default of 100 the
+    LRU evicts every one of them before it is reused)."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def round_of_compiles():
+        n0 = compiles.METRIC_COMPILATION_TIME().getCount()
+        for i in range(120):
+            spark.range(1).select(
+                (F.col("id") * 7 + F.lit(1_000_003 + i)).alias("x")
+            ).collect()
+        return compiles.METRIC_COMPILATION_TIME().getCount() - n0
+
+    assert round_of_compiles() > 100
+    assert round_of_compiles() == 0
 
 
 def test_rate_source_smoke(spark):

@@ -189,6 +189,11 @@ def transitive(graph: dict[str, set[str]], seeds: set[str]) -> set[str]:
 # --------------------------------------- entry-file closure per gate
 
 
+# One source line with its line end, split as ``ast.get_source_segment``
+# splits (on \r\n, \r and \n only, never on form feeds).
+_LINE = re.compile(r"[^\r\n]*(?:\r\n|\r|\n)|[^\r\n]+\Z")
+
+
 def gate_table(tree: ast.AST) -> dict[str, str]:
     """gate name -> oracle-constant name, from the ``Gate(plan,
     ORACLE_SQL, ...)`` rows of the ``GATES`` table in one parsed
@@ -210,7 +215,7 @@ class _EntryAnalysis:
 
     def __init__(self, source: str, oracle_const: dict[str, str] | None = None):
         self.tree = ast.parse(source)
-        self.source = source
+        self.lines = _LINE.findall(source)
         self.defs: dict[str, ast.AST] = {}
         self.alias_files: dict[str, str] = {}
         for node in self.tree.body:
@@ -265,11 +270,22 @@ class _EntryAnalysis:
         if gate not in self.defs:
             return None
         names, _files = self.closure([gate, self.oracle_const[gate]])
-        segs = sorted(
-            ast.get_source_segment(self.source, self.defs[n]) or n
-            for n in names
-        )
+        segs = sorted(self._segment(self.defs[n]) or n for n in names)
         return hashlib.sha256("\n".join(segs).encode()).hexdigest()[:16]
+
+    def _segment(self, node: ast.AST) -> str:
+        """``ast.get_source_segment(source, node)`` over the lines split
+        once in ``__init__``: that function re-splits the whole file on
+        every call, which made a run of this tool take minutes."""
+        first, last = node.lineno - 1, node.end_lineno - 1
+        col, end_col = node.col_offset, node.end_col_offset
+        if first == last:
+            return self.lines[first].encode()[col:end_col].decode()
+        return "".join([
+            self.lines[first].encode()[col:].decode(),
+            *self.lines[first + 1:last],
+            self.lines[last].encode()[:end_col].decode(),
+        ])
 
     def gate_files(self, gate: str, graph: dict[str, set[str]]) -> set[str]:
         _names, files = self.closure([gate, self.oracle_const[gate]])
